@@ -23,7 +23,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   // representative of each subsystem: scan+agg, joins, windows, dedup,
   // similarity, text
-  private val headline = Seq(
+  private[graft] val headline = Seq(
     "a3_multikey_agg",
     "j3_broadcast_dim_join",
     "j6_feature_assembly",
@@ -457,7 +457,19 @@ object Bench {
       }
   }
 
+  /** Headline names the registry does not resolve: a renamed or removed
+    * query must fail the bench, not silently shrink its total.
+    */
+  private[graft] def missingHeadline: Seq[String] =
+    headline.filterNot(Registry.byName.contains)
+
   def main(args: Array[String]): Unit = {
+    val missing = missingHeadline
+    if (missing.nonEmpty) {
+      Console.err.println("bench FAILED: headline names not in the registry: " +
+        missing.mkString(", "))
+      sys.exit(1)
+    }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
@@ -489,8 +501,7 @@ object Bench {
     // SPARK_GRAFT_BENCH_ONLY=<substring>[,…] restricts the headline for
     // fast local timing iteration; the driver never sets it.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(',').toSeq)
-    val qs = headline.filter(Registry.byName.contains)
-      .filter(n => only.forall(_.exists(n.contains)))
+    val qs = headline.filter(n => only.forall(_.exists(n.contains)))
     // a failing query must FAIL the bench, not time as ~0s and read as a
     // speedup — record the error per query and exit nonzero at the end
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]

@@ -1,18 +1,33 @@
 package graft.dedup
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType,
+  StringType}
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
 
-/** Distributed connected components over an edge-list DataFrame.
+import scala.jdk.CollectionConverters._
+import scala.util.DynamicVariable
+
+/** Connected components over an edge-list DataFrame.
   *
   * The reference materialises the whole similarity graph on one machine
   * and runs `networkx.connected_components` (dqa/data_getters.py:312-320)
   * — the single clearest place its design cannot scale. Here: the
   * alternating **large-star / small-star** algorithm (Kiveris et al.,
   * "Connected Components in MapReduce and Beyond", SoCC'14), which
-  * converges in O(log n) rounds of pure `groupBy`/`join` — no driver
-  * state, no GraphFrames dependency.
+  * converges in O(log n) rounds of pure `groupBy`/`join` — no
+  * GraphFrames dependency.
+  *
+  * Small graphs finish on the driver instead: once the symmetrized,
+  * deduplicated edge set is materialised, an edge count of at most
+  * [[driverMaxEdges]] (500,000) is collected and labelled with a
+  * union-find. Each round of the loop costs ~11 Spark jobs of fixed
+  * scheduling cost whatever the graph size, and in local mode on 4 cores
+  * the driver finish was faster at every size measured (2,000 to 8M
+  * edges), so the bound is set by driver memory, not by a time
+  * crossover. Graphs over the bound pay no extra job for the check.
   *
   * Scale posture: each round is two hash aggregations + one join on the
   * edge list; lineage is cut every round with `localCheckpoint` so plans
@@ -38,7 +53,7 @@ object ConnectedComponents {
     */
   def cached(edges: DataFrame, nodeSet: Option[DataFrame] = None,
       maxIterations: Int = 50, key: Option[String] = None): DataFrame = {
-    val k = Seq("cc-largestar-v1",
+    val k = Seq("cc-largestar-v2",
       key.getOrElse(Seq(graft.domain.SharedCache.planKey(edges),
         nodeSet.map(graft.domain.SharedCache.planKey).getOrElse("endpoints"))
         .mkString("|")),
@@ -61,6 +76,63 @@ object ConnectedComponents {
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
       df.checkpoint(false)
     else df.localCheckpoint(false)
+
+  /** Largest symmetrized edge count the driver union-find labels; larger
+    * graphs, and ids other than Long, Int and String, run the loop.
+    * Fixed, not tied to any Spark setting, and sized by driver memory:
+    * the collected edges plus the parent map hold ≈120 bytes per edge
+    * with Long ids and ≈220 with 32-character string ids, so 60–110 MB
+    * at the bound, inside Spark's default 1 GB driver heap. Specs force
+    * the loop with `driverMaxEdges.withValue(-1)`.
+    */
+  private[graft] val driverMaxEdges = new DynamicVariable[Long](500000L)
+
+  /** Spark's ordering of the id types the driver finish handles: strings
+    * compare as UTF-8 bytes (`UTF8String`), which differs from
+    * `java.lang.String`'s UTF-16 order, so the roots equal the loop's `min`.
+    */
+  private def idLess(dt: DataType): Option[(Any, Any) => Boolean] =
+    dt match {
+      case LongType =>
+        Some((a, b) => a.asInstanceOf[Long] < b.asInstanceOf[Long])
+      case IntegerType =>
+        Some((a, b) => a.asInstanceOf[Int] < b.asInstanceOf[Int])
+      case StringType => Some((a, b) =>
+        UTF8String.fromString(a.asInstanceOf[String])
+          .compareTo(UTF8String.fromString(b.asInstanceOf[String])) < 0)
+      case _ => None
+    }
+
+  /** Driver finish: label the collected edge set `g` (u, v), which is
+    * symmetrized, so every non-isolated node appears as `u`. Each root is
+    * its component's min id under `lt`. Returns (u, root) rows.
+    */
+  private def unionFind(g: DataFrame,
+      lt: (Any, Any) => Boolean): DataFrame = {
+    val parent = new java.util.HashMap[Any, Any]()
+    def find(x: Any): Any = {
+      var a = x
+      var p = parent.get(a)
+      while (p != a) { // path halving
+        val gp = parent.get(p)
+        parent.put(a, gp)
+        a = gp
+        p = parent.get(a)
+      }
+      a
+    }
+    for (r <- g.collect()) {
+      val (u, v) = (r.get(0), r.get(1))
+      parent.putIfAbsent(u, u)
+      parent.putIfAbsent(v, v)
+      val (ru, rv) = (find(u), find(v))
+      if (ru != rv) {
+        if (lt(ru, rv)) parent.put(rv, ru) else parent.put(ru, rv)
+      }
+    }
+    val rows = parent.keySet.asScala.toSeq.map(u => Row(u, find(u)))
+    g.sparkSession.createDataFrame(rows.asJava, g.schema)
+  }
 
   /** @param edges two-column DataFrame (src, dst); undirected, any order.
     * @param nodeSet optional one-column (id) universe — isolated nodes
@@ -117,27 +189,37 @@ object ConnectedComponents {
       (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
     }
 
-    var converged = false
-    var iter = 0
-    var gSig: Option[(Long, Long)] = None // carried across rounds
     val t0 = System.nanoTime()
+    // materialises g; its edge count picks the finish (the loop needs
+    // this signature for its first convergence test anyway)
+    var gSig = signature(g)
+    val lt = idLess(g.schema.head.dataType)
+      .filter(_ => gSig._1 <= driverMaxEdges.value)
+    val local = lt.isDefined
+    var converged = local
+    var iter = 0
+    for (less <- lt) {
+      val done = unionFind(g, less)
+      g.unpersist()
+      g = done
+    }
     while (!converged && iter < maxIterations) {
       // one alternation per materialization: the alternation's inner
       // subtrees fan out (large feeds both dmins and the join), so
       // composing rounds without a barrier recomputes them
       // combinatorially — measured slower, not faster
       val small = barrier(alternate(g))
-
-      if (gSig.isEmpty) gSig = Some(signature(g))
       val smallSig = signature(small)
       g.unpersist()
       g = small
-      converged = gSig.contains(smallSig)
-      gSig = Some(smallSig)
+      converged = gSig == smallSig
+      gSig = smallSig
       iter += 1
     }
-    System.err.println(f"[cc] ${if (converged) "converged" else "CAPPED"}" +
-      f" after $iter rounds, ${gSig.fold(-1L)(_._1)} edges," +
+    val how =
+      if (local) "finished by driver union-find"
+      else s"${if (converged) "converged" else "CAPPED"} after $iter rounds"
+    System.err.println(f"[cc] $how, ${gSig._1} edges," +
       f" ${(System.nanoTime() - t0) / 1e9}%.2f s")
 
     // after convergence every edge is (node -> component root); isolated

@@ -9,7 +9,10 @@ import org.apache.spark.sql.functions._
   * dqa/data_getters.py:288-404), re-expressed as joins — the reference
   * builds a networkx graph and python dicts on one machine, the two
   * structures that cannot scale; every step here is a shuffle-bounded
-  * DataFrame op.
+  * DataFrame op. The one exception is by size: a duplicate graph of at
+  * most `ConnectedComponents.driverMaxEdges` edges is labelled by a
+  * driver union-find inside [[ConnectedComponents.run]], larger ones by
+  * its distributed loop.
   *
   * Contract mirror:
   *  - `duplicateSubgraphs` ≙ get_duplicate_subgraphs: components of the

@@ -17,4 +17,18 @@ class TablesMemoSpec extends SparkSpec {
     assert(o.columns.contains("o_orderkey"))
     assert(Tables.relationCache.size <= Tables.MaxRelations)
   }
+
+  test("shared-cache entry readers count against the same cap") {
+    val df = spark.range(1).toDF("x")
+    (0 until Tables.MaxRelations).foreach(i =>
+      Tables.relationCache.put((spark, s"synthetic/$i"), df))
+    val root = java.nio.file.Files.createTempDirectory("memo").toString
+    val entry = domain.SharedCache.materialise(spark.range(3).toDF("x"),
+      root, "entry")
+    assert(entry.count() == 3)
+    assert(Tables.relationCache.size <= Tables.MaxRelations)
+    assert(Tables.relationCache.keySet.stream()
+      .anyMatch(_._2.startsWith(s"$root/entry-")))
+    Tables.relationCache.keySet.removeIf(_._2.startsWith("synthetic/"))
+  }
 }

@@ -1,18 +1,16 @@
 package graft.dedup
 
-import org.apache.spark.sql.functions._
-
 /** Incremental CC ≡ full recompute, including fresh nodes and chains
-  * that merge THROUGH the delta.
+  * that merge THROUGH the delta — under both CC finishes.
   */
-class IncrementalCcSpec extends graft.SparkSpec {
+class IncrementalCcSpec extends CcFinishes {
   import spark.implicits._
 
   private def cc(edges: Seq[(Long, Long)]) =
     ConnectedComponents.run(edges.toDF("src", "dst"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
-  test("delta merging two old components and adding new nodes") {
+  bothFinishes("delta merging two old components and adding new nodes") {
     val base = Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L))
     val labels0 = ConnectedComponents.run(base.toDF("src", "dst"))
     // delta: bridges components {1,2,3} and {10,11}; attaches fresh
@@ -26,7 +24,7 @@ class IncrementalCcSpec extends graft.SparkSpec {
     assert(got(11L) == 1L && got(99L) == 20L && got(51L) == 50L)
   }
 
-  test("chain of deltas each collapsing through prior labels") {
+  bothFinishes("chain of deltas each collapsing through prior labels") {
     // components merge transitively ACROSS deltas: 1-2, then 3-4, then
     // 2-3 must unite all four under min id 1
     var labels = ConnectedComponents.run(Seq((1L, 2L)).toDF("src", "dst"))
