@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs the headline queries on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line with per-query wall seconds.
   *
@@ -471,32 +469,14 @@ object Bench {
       sys.exit(1)
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // static conf, must be set before the session exists: the default
-      // 100-entry codegen class cache thrashes under a ~100-operator
-      // registry (every eviction = a fresh Janino compile on the next
-      // use). Sizing it to the workload cut the warm total 38% and the
-      // cold total 20% at sf0.1; any long-running multi-operator
-      // pipeline wants the same.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local()
     spark.sparkContext.setLogLevel("ERROR")
     val taskFailures = new TaskFailureListener
     spark.sparkContext.addSparkListener(taskFailures)
 
     // start from a cold shared cache: the cold pass below then measures
     // the pipeline builds, and prior runs can't contaminate the timings
-    val root = new org.apache.hadoop.fs.Path(domain.SharedCache.defaultRoot)
-    root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(root, true)
+    domain.SharedCache.clear(spark)
 
     // SPARK_GRAFT_BENCH_ONLY=<substring>[,…] restricts the headline for
     // fast local timing iteration; the driver never sets it.

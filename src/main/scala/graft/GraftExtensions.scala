@@ -9,11 +9,13 @@ import graft.functions._
 
 /** SparkSessionExtensions registering the engine's native expressions as
   * SQL functions, so `spark.sql("SELECT simhash64(text) ...")` works —
-  * the full custom-function surface is reachable from pure SQL:
+  * the full custom-function surface is reachable from pure SQL.
+  * [[Session.local]] installs it in every session the program builds.
   *
-  * {{{
-  * SparkSession.builder().withExtensions(new GraftExtensions)...
-  * }}}
+  * The planner strategies (as-of and interval-overlap joins) are not
+  * injected here: `AsOfJoin.backward` and `IntervalOverlapJoin.overlap`
+  * attach them at the use site, which also covers sessions built
+  * without these extensions.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
@@ -26,19 +28,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // spark.graft.approxDistinct (see the rule's scaladoc)
     e.injectOptimizerRule(session =>
       graft.plans.ApproxDistinctRewrite(session))
-    // whole-operator surface: the native backward as-of join
-    // (logical node + strategy + sort-merge exec, graft.plans.AsOfJoin)
-    e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
-    // …and the native interval-overlap plane sweep
-    // (graft.plans.IntervalOverlapJoin)
-    e.injectPlannerStrategy(_ => graft.plans.IntervalJoinStrategy)
   }
 }
 
-/** The same function surface, attachable to an already-running session
-  * (`GraftFunctions.register(spark)`) — useful where the session was
-  * built without extensions (notebooks, tests).
-  */
+/** The SQL function surface [[GraftExtensions]] injects: name → builder. */
 object GraftFunctions {
   val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "rolling_hash" -> (exprs => RollingHashExpr(exprs.head)),
@@ -60,20 +53,4 @@ object GraftFunctions {
     "vec_l1" -> (exprs => VectorOps.L1Expr(exprs.head, exprs(1))),
     "hilbert_key" -> (exprs => HilbertExpr(exprs.head, exprs(1))),
   )
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    builders.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, builder, "built-in")
-    }
-    // the optimizer rule for sessions built WITHOUT extensions
-    // (notebooks, shared test sessions): experimental rules run after
-    // the optimizer batches, where the single-distinct aggregate still
-    // carries its isDistinct flag; double registration is harmless —
-    // the rewritten node no longer matches
-    val rule = graft.plans.ApproxDistinctRewrite(spark)
-    if (!spark.experimental.extraOptimizations.contains(rule))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ rule
-  }
 }

@@ -260,23 +260,11 @@ object ScaleStress {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val factor = if (args.length > 1) args(1).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scale-stress")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local()
     spark.sparkContext.setLogLevel("WARN")
 
     // hermetic: the dedup-cluster pipeline memoises through SharedCache
-    val root = new org.apache.hadoop.fs.Path(domain.SharedCache.defaultRoot)
-    root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(root, true)
+    domain.SharedCache.clear(spark)
 
     val scaleDir = "target/scale"
     new java.io.File(scaleDir).mkdirs()

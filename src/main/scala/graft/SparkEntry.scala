@@ -17,13 +17,9 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Registry.byName("a3_multikey_agg").run(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. Spec-only
-    * rows (approximate by design, hash-green twin + spec registered —
-    * see [[Q.specOnly]]) are withdrawn from the driver's dump so the
-    * correctness report is 100% oracle-checked by construction.
-    */
+  /** One entry per registered operator: the correctness dump carries every row. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Registry.all.filterNot(_.specOnly).map(q => q.name -> q.run).toMap
+    Registry.all.map(q => q.name -> q.run).toMap
 
   /** For each key in `queries`, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -19,26 +18,13 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the default 100-entry codegen class cache thrashes under a
-      // ~230-query dump (see Bench.scala) — static conf, set pre-session
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // hermetic gate: start from a cold shared cache so a previous
     // process's materialisations (different SF, different logic version)
     // can never leak into the correctness run
-    val cacheRoot = new org.apache.hadoop.fs.Path(
-      domain.SharedCache.defaultRoot)
-    cacheRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(cacheRoot, true)
+    domain.SharedCache.clear(spark)
     // SPARK_GRAFT_ONLY=<substring>[,<substring>…] restricts the dump for
     // fast local iteration (a query is kept if ANY listed substring
     // matches); the driver never sets it, so its runs stay complete.

@@ -1,7 +1,7 @@
 package graft.domain
 
 import graft.operators.TimeWindows
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
 import java.sql.Timestamp
@@ -21,14 +21,7 @@ object RunPipeline {
 
   def main(args: Array[String]): Unit = {
     val outRoot = if (args.nonEmpty) args(0) else "/tmp/ojo_pipeline_out"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .appName("graft-pipeline")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

@@ -36,11 +36,11 @@ object SharedCache {
     * override per-call for cluster deployments (HDFS/S3A path).
     *
     * The root is PER-PROCESS (pid suffix): the harness mains (Verify,
-    * Bench, ScaleStress) each start by deleting their root for
-    * hermeticity, and with a machine-global path a concurrently running
-    * second harness would wipe the first one's entries mid-run —
-    * observed as cache-backed queries silently re-building inside a
-    * bench warm pass. Entries are content-addressed, so sharing across
+    * Bench, ScaleStress, ScaleTrades, tools.Probe) each start with
+    * [[clear]] for hermeticity, and with a machine-global path a
+    * concurrently running second harness would wipe the first one's
+    * entries mid-run — observed as cache-backed queries silently
+    * re-building inside a bench warm pass. Entries are content-addressed, so sharing across
     * processes was only ever an optimisation; isolation is worth more.
     * A cluster deployment overrides per-call with a durable shared path
     * and does NOT delete it at startup.
@@ -48,6 +48,14 @@ object SharedCache {
   def defaultRoot: String = {
     val pid = ProcessHandle.current().pid()
     s"${System.getProperty("java.io.tmpdir")}/graft_shared_cache_$pid"
+  }
+
+  /** Deletes [[defaultRoot]], so the next cached stage builds from
+    * scratch and no earlier run's entries reach this one.
+    */
+  def clear(spark: SparkSession): Unit = {
+    val root = new Path(defaultRoot)
+    root.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(root, true)
   }
 
   private def md5Hex(s: String): String =

@@ -6,7 +6,7 @@ import org.apache.spark.sql.types.{LongType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** DataSource V2 FunctionCatalog — the last catalog extension surface
-  * beside the injected expressions/rules/strategies (GraftExtensions)
+  * beside the injected expressions and rule (GraftExtensions)
   * and the DSv2 table connector (RecSource): SQL-addressable functions
   * resolved THROUGH A CATALOG (`graft_fns.default.<fn>(…)`), the way a
   * lakehouse exposes engine-version-pinned UDFs to every session

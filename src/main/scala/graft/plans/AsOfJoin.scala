@@ -51,9 +51,9 @@ final case class AsOfJoinPlan(
     copy(left = newLeft, right = newRight)
 }
 
-/** Planner rule claiming [[AsOfJoinPlan]] nodes. Registered per session via
-  * `AsOfJoin.register` (experimental strategies) or `GraftExtensions`
-  * (`injectPlannerStrategy`) — both idempotent.
+/** Planner rule claiming [[AsOfJoinPlan]] nodes. `AsOfJoin.backward`
+  * attaches it to the calling session's experimental strategies
+  * (idempotently) before it builds the node.
   */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
@@ -196,7 +196,7 @@ final case class AsOfJoinExec(
 
 object AsOfJoin {
   /** Idempotently attach the planner strategy to a running session. */
-  def register(spark: SparkSession): Unit =
+  private def register(spark: SparkSession): Unit =
     if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ AsOfJoinStrategy

@@ -251,7 +251,7 @@ final case class IntervalJoinExec(
 
 object IntervalOverlapJoin {
   /** Idempotently attach the planner strategy to a running session. */
-  def register(spark: SparkSession): Unit =
+  private def register(spark: SparkSession): Unit =
     if (!spark.experimental.extraStrategies.contains(IntervalJoinStrategy))
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ IntervalJoinStrategy

@@ -32,7 +32,7 @@ object Bm25 {
     // and the scoring scan consume `base`, and ReuseExchange shares the
     // one cheap raw-text exchange between them — without it the whole
     // tokenize+score pipeline runs at the file count's parallelism
-    // (StageAudit: a 0.33 s one-task stage at sf0.1, and it grows with
+    // (tools.Probe: a 0.33 s one-task stage at sf0.1, and it grows with
     // the corpus). The widen is conditional on the scan actually being
     // narrow: a real corpus has natural split parallelism and skips the
     // exchange entirely.

@@ -580,8 +580,8 @@ object TextQueries {
     (s, d) => {
       val words = split(col("text"), " ")
       // the bigram fanout below is the registry's heaviest per-row HOF
-      // chain; widen the single-split scan ahead of it (StageAudit
-      // measured a 0.75 s one-task stage at sf0.1)
+      // chain; widen the single-split scan ahead of it (a stage audit,
+      // now tools.Probe, measured a 0.75 s one-task stage at sf0.1)
       val base = graft.util.Widen.cpuHeavy(
           Tables(s, d).documents.select("doc_id", "text"))
         .select(col("doc_id"), col("text"),

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.Registry
-import org.apache.spark.sql.SparkSession
 
 /** Plan auditor: prints formatted physical plans for selected queries so
   * pushdown/broadcast/codegen can be eyeballed (and greps itself for the
@@ -9,13 +8,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local()
     spark.sparkContext.setLogLevel("ERROR")
     val names = if (args.nonEmpty) args.toSeq else Seq(
       "a3_multikey_agg", "j3_broadcast_dim_join", "p4_date_range_filter",

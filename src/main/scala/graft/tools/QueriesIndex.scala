@@ -3,7 +3,7 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 
 /** Generates QUERIES.md — the registry index: one row per registered
-  * query with its verification mode (DuckDB oracle / spec-only), bench
+  * query with its verification mode (DuckDB oracle / rows-only), bench
   * block membership, and whether PLANS.md / SCALING.md mention it (the
   * plan-audit and scale-stress cross-links). Pure metadata walk — no
   * SparkSession is started; `Q.run` thunks are never invoked.
@@ -56,21 +56,14 @@ object QueriesIndex {
     sb.append(s"**${qs.length} registered queries.** ")
     sb.append(s"${qs.count(_.oracle.isDefined)} carry a DuckDB oracle ")
     sb.append("(hash-compared by the driver); ")
-    sb.append(s"${qs.count(q => q.oracle.isEmpty && !q.specOnly)} are ")
-    sb.append("dumped rows-only; ")
-    sb.append(s"${qs.count(_.specOnly)} are spec-only ")
-    sb.append("(approximate by design, hash-green twin registered — ")
-    sb.append("see `Q.specOnly`).\n\n")
+    sb.append(s"${qs.count(_.oracle.isEmpty)} are dumped rows-only.\n\n")
     sb.append("Columns: *oracle* = verification mode; *plan* / *stress* ")
     sb.append("= the query (or the operator family it belongs to) ")
     sb.append("appears in PLANS.md / SCALING.md by name.\n\n")
     sb.append("| query | family | oracle | plan | stress |\n")
     sb.append("|---|---|---|---|---|\n")
     qs.sortBy(_.name).foreach { q =>
-      val oracle =
-        if (q.specOnly) "spec-only"
-        else if (q.oracle.isDefined) "duckdb-sql"
-        else "rows-only"
+      val oracle = if (q.oracle.isDefined) "duckdb-sql" else "rows-only"
       // SCALING/PLANS often name an operator by its family alias
       // (qini_uplift for a102_qini_uplift) — match the suffix too,
       // guarded at >6 chars so short stems can't false-positive

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.Registry
-import org.apache.spark.sql.SparkSession
 
 /** r09 scale-probe (r08 VERDICT items 4 + 5): the queries whose round-8
   * optimizations were kept on a 100 TB argument that local sf0.1 numbers
@@ -23,23 +22,11 @@ object ScaleTrades {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val factor = if (args.length > 1) args(1).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scale-trades")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local()
     spark.sparkContext.setLogLevel("ERROR")
 
     // hermetic: several targets memoise through SharedCache
-    val root = new org.apache.hadoop.fs.Path(graft.domain.SharedCache.defaultRoot)
-    root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(root, true)
+    graft.domain.SharedCache.clear(spark)
 
     val scaleDir = "target/scale"
     new java.io.File(scaleDir).mkdirs()

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.Registry
-import org.apache.spark.sql.SparkSession
 
 /** The externally-quotable conformance scaling curve: every TPC-H and
   * SSB query timed at ×1 (sf0.1-shaped warehouse, ~600k lineitem) and
@@ -20,17 +19,7 @@ object TpchScale {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val factor = if (args.length > 1) args(1).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-tpch-scale")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local()
     spark.sparkContext.setLogLevel("ERROR")
 
     val scaleDir = "target/scale"

@@ -9,7 +9,7 @@ import org.apache.spark.sql.DataFrame
   * map chained onto the scan (regex extraction, containment scans,
   * per-window pair scoring) serialises onto one core. One round-robin
   * exchange of the (projected!) input restores full parallelism; the
-  * registry's stage audit (`tools.StageAudit`) is the measurement that
+  * registry's stage audit (`tools.Probe`'s 1-task flag) is the measurement that
   * decides where this is worth that exchange.
   *
   * At production scale a 100 TB table carries orders of magnitude more

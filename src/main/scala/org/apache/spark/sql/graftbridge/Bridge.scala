@@ -6,8 +6,9 @@ import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Column ⇄ Expression bridge for custom Catalyst expressions.
   * Spark 4 made the converters `private[sql]`; this shim lives under
-  * `org.apache.spark.sql` solely to re-export them (public Spark API
-  * surface, no internals copied).
+  * `org.apache.spark.sql` solely to re-export them and the one
+  * `private[spark]` call `tools.Probe` needs (public Spark API surface,
+  * no internals copied).
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -31,4 +32,10 @@ object Bridge {
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[
       org.apache.spark.sql.Row]].queryExecution.analyzed
+
+  /** Blocks until every queued listener event has been delivered, so a
+    * listener read after an action has seen all of that action's stages.
+    */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

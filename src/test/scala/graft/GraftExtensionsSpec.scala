@@ -1,23 +1,50 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 
-/** The custom expressions are reachable from pure SQL via
-  * SparkSessionExtensions registration.
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+
+/** The session factory's contract, and the custom expressions reachable
+  * from pure SQL through the extensions it installs.
   */
-class GraftExtensionsSpec extends AnyFunSuite {
+class GraftExtensionsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
-  private lazy val spark = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .appName("ext-spec")
-      .withExtensions(new GraftExtensions) // honoured on a fresh JVM
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    GraftFunctions.register(s) // honoured even on a reused session
-    s
+  private def asOfPair = {
+    import spark.implicits._
+    val l = Seq((1L, 10L, 100L)).toDF("k", "t", "lid")
+    val r = Seq((1L, 5L, 200L)).toDF("rk", "rt", "rid")
+    graft.plans.AsOfJoin.backward(l, r, "k", "rk", "t", "rt")
+  }
+
+  test("factory contract: local[4], the program's settings, SQL and planner surface") {
+    assert(spark.sparkContext.master == "local[4]")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") == "5000")
+    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(spark.sql("SELECT simhash64('a b c')").head().getLong(0) ==
+      graft.functions.TextSketches.simhash64(
+        org.apache.spark.unsafe.types.UTF8String.fromString("a b c")))
+    // no register call: backward attaches its strategy at the use site
+    val df = asOfPair
+    df.collect()
+    assert(collectWithSubqueries(df.queryExecution.executedPlan) {
+      case e: graft.plans.AsOfJoinExec => e
+    }.nonEmpty, "the as-of strategy did not claim the node")
+  }
+
+  test("graft.Session is the only session builder under src/") {
+    val needle = "SparkSession" + ".builder"
+    val src = Paths.get("src")
+    assert(Files.isDirectory(src), s"run from the repo root, not ${Paths.get("").toAbsolutePath}")
+    val walk = Files.walk(src)
+    val hits = try walk.iterator().asScala
+      .filter(p => Files.isRegularFile(p) && new String(Files.readAllBytes(p),
+        java.nio.charset.StandardCharsets.ISO_8859_1).contains(needle))
+      .map(p => src.relativize(p).toString).toSeq
+    finally walk.close()
+    assert(hits == Seq("main/scala/graft/Session.scala"))
   }
 
   test("SQL surface: sketches, jaccard, vector ops") {
@@ -60,15 +87,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
   }
 
   test("planner surface: the as-of strategy is injected") {
-    // the extensions-built (or register()-patched) session must claim
-    // AsOfJoinPlan nodes without an explicit AsOfJoin.register call
-    graft.plans.AsOfJoin.register(spark)
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val l = Seq((1L, 10L, 100L)).toDF("k", "t", "lid")
-    val r = Seq((1L, 5L, 200L)).toDF("rk", "rt", "rid")
-    val got = graft.plans.AsOfJoin
-      .backward(l, r, "k", "rk", "t", "rt")
+    val got = asOfPair
       .select("lid", "rid").collect().map(x => (x.getLong(0), x.getLong(1)))
     assert(got.toSeq == Seq((100L, 200L)))
   }

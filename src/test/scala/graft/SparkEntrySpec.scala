@@ -14,11 +14,10 @@ class SparkEntrySpec extends SparkSpec {
   test("every oracle key is a query key") {
     val qs = SparkEntry.queries.keySet
     assert(SparkEntry.oracleSql.keySet.subsetOf(qs))
-    // the driver surface is the registry MINUS the spec-only rows
-    // (approximate by design, twins dumped instead — see Q.specOnly),
-    // and on that surface every query carries an oracle: the
-    // correctness report is 100% hash-checked by construction
-    assert(qs.size == Registry.all.count(!_.specOnly))
+    // the dumped surface is the whole registry, and on that surface
+    // every query carries an oracle: the correctness report is 100%
+    // hash-checked by construction
+    assert(qs.size == Registry.all.size)
     assert(SparkEntry.oracleSql.keySet == qs)
   }
 

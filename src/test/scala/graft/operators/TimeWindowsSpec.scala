@@ -1,11 +1,9 @@
 package graft.operators
 
-import org.scalatest.funsuite.AnyFunSuite
-
 import java.time.LocalDate
 
 /** Golden tests ported from dqa/tests/test_data_getters.py:37-76. */
-class TimeWindowsSpec extends AnyFunSuite {
+class TimeWindowsSpec extends graft.SparkSpec {
   import TimeWindows._
 
   private def d(s: String): LocalDate = LocalDate.parse(s)
@@ -50,8 +48,6 @@ class TimeWindowsSpec extends AnyFunSuite {
   }
 
   test("dateSpine is inclusive and stepped") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
     val rows = dateSpine(spark, d("2021-02-01"), d("2021-03-01"), 7)
       .collect().map(_.getDate(0).toLocalDate)
     assert(rows.toSeq == Seq(d("2021-02-01"), d("2021-02-08"),

@@ -1,29 +1,10 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
 /** The opt-in COUNT(DISTINCT) → HLL++ rewrite: flag off = exact plan
   * untouched; flag on = sketch aggregation, estimate within the HLL
   * error bound, and the distinct's keyed exchange gone.
   */
-class ApproxDistinctRewriteSpec extends AnyFunSuite {
-
-  private lazy val spark = {
-    // getOrCreate may return a session another suite built WITHOUT the
-    // extensions — attach via the running-session path (which is also
-    // what this test then exercises); on a fresh session the injected
-    // rule and the experimental rule coexist idempotently
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("approx-distinct-spec")
-      .withExtensions(new graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.GraftFunctions.register(s)
-    s
-  }
+class ApproxDistinctRewriteSpec extends graft.SparkSpec {
 
   private def df = {
     import spark.implicits._
