@@ -1,22 +1,30 @@
 package graft
 
-/** Benchmark main: runs the headline queries on SPARK_GRAFT_SF_DIR and
-  * prints ONE JSON line with per-query wall seconds.
+/** Benchmark main: runs the headline queries on SPARK_GRAFT_SF_DIR through
+  * [[graft.tools.Probe.run]], the program's one timing loop, and prints
+  * ONE JSON line with per-query wall seconds (the full detail goes to
+  * BENCH_OUT.json, or SPARK_GRAFT_BENCH_OUT).
   *
-  * Protocol (noise-controlled):
+  * Protocol (noise-controlled; the passes are Probe's):
   *   1. the shared materialisation cache is cleared, so run-to-run state
   *      can't leak in;
-  *   2. a COLD pass runs every query once, in order — this pass pays and
-  *      exposes the one-off pipeline builds (surface-form dedup,
+  *   2. a COLD `count()` pass runs every query once, in order — this pass
+  *      pays and exposes the one-off pipeline builds (surface-form dedup,
   *      connected-components loops) exactly once, like a real pipeline
   *      run would, and doubles as the JVM/codegen warmup;
-  *   3. three WARM passes run next; the reported per-query number is the
-  *      median of the three — single-shot timings swung ±50% on the LSH
-  *      queries between rounds, medians don't.
+  *   3. an untimed noop-sink PIN pass finishes any build a failed task
+  *      left incomplete and compiles the noop plans;
+  *   4. three WARM passes each time a `count()` and a noop-sink write of
+  *      every query; the reported per-query numbers are the medians of
+  *      the three — single-shot timings swung ±50% on the LSH queries
+  *      between rounds, medians don't.
   *
-  * `queries` holds the medians (steady-state, what a scheduler would see
-  * for a repeated query); `cold` holds the first-pass times (what a
-  * one-off pipeline pays, builds included). `value` = sum of medians.
+  * `queries` holds the warm count medians (steady-state, what a scheduler
+  * would see for a repeated query), `noop` the warm noop-sink medians
+  * (every column computed: count lets Catalyst prune aggregates and
+  * windows), `cold` the first-pass times (what a one-off pipeline pays,
+  * builds included). `value` = sum of count medians, kept so the r01–r09
+  * series stays comparable; `value_noop` = sum of noop medians.
   */
 object Bench {
   // representative of each subsystem: scan+agg, joins, windows, dedup,
@@ -402,17 +410,12 @@ object Bench {
   /** Streaming parity rows measure fixed micro-batch + state-store setup
     * (~2-3 s each), not operator speed — they stay in the run (regression
     * coverage) but are totalled as their own block so the batch headline
-    * is a clean engine-speed signal.
-    *
-    * Block membership is an EXPLICIT tag, not a name-substring heuristic:
-    * the old `contains("_parity")` check was one rename away from
-    * silently reclassifying a row, and `batch_total` used to include the
-    * 35 TPC-H/SSB conformance rows while `tpch_total` omitted `ssb_*` —
-    * so the "engine speed" and "conformance" signals were entangled.
-    * Now: `batch_total` = registry operators only; `conformance_total` =
-    * tpch + ssb (also broken out individually); `streaming_total` = the
-    * six parity rows. The three blocks partition the headline — their
-    * sum is `value`.
+    * is a clean engine-speed signal. Membership is an explicit list, not
+    * a name-substring heuristic one rename away from reclassifying a row.
+    * `batch_total` = registry operators only; `conformance_total` = tpch +
+    * ssb (also broken out individually); `streaming_total` = the six
+    * parity rows. The three blocks partition the headline: their sum is
+    * `value`.
     */
   private val streamingBlock: Set[String] = Set(
     "w7b_transformwithstate_parity",
@@ -430,36 +433,64 @@ object Bench {
   private def isBatch(name: String): Boolean =
     !isStreaming(name) && !isConformance(name)
 
-  /** Task-level failure attribution. The r06/r07 bench tails each ended
-    * with an anonymous executor stack trace while reporting `n_errors: 0`
-    * — a task failed, Spark retried it, the QUERY succeeded, and the
-    * retry's cost landed silently in some timing. This listener counts
-    * every non-Success task end and keeps the first reason header, so a
-    * timing swing can be attributed (or retries ruled out) from the JSON
-    * alone instead of from a log that isn't captured.
-    */
-  private final class TaskFailureListener
-      extends org.apache.spark.scheduler.SparkListener {
-    val failed = new java.util.concurrent.atomic.AtomicLong(0L)
-    @volatile var firstReason: String = ""
-    override def onTaskEnd(
-        e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-      e.reason match {
-        case org.apache.spark.Success => ()
-        case r =>
-          failed.incrementAndGet()
-          if (firstReason.isEmpty)
-            firstReason = r.toString.linesIterator
-              .find(_.nonEmpty).getOrElse(r.getClass.getSimpleName)
-              .take(200)
-      }
-  }
-
   /** Headline names the registry does not resolve: a renamed or removed
     * query must fail the bench, not silently shrink its total.
     */
   private[graft] def missingHeadline: Seq[String] =
     headline.filterNot(Registry.byName.contains)
+
+  /** BENCH_OUT.json's object and the stdout line for one run over `sfDir`.
+    * The line keeps every field of the r01–r09 series, in order;
+    * `value_noop` and BENCH_OUT.json's `noop` map are additions.
+    */
+  private[graft] def render(run: tools.Probe.Run, sfDir: String): (String, String) = {
+    val rs = run.results
+    def esc(s: String): String =
+      s.replace("\\", "\\\\").replace("\"", "\\\"")
+        .flatMap(c => if (c < ' ') f"\\u${c.toInt}%04x" else c.toString)
+    def str(s: String): String = "\"" + esc(s) + "\""
+    def num(v: Double): String = f"$v%.3f"
+    def obj(kvs: Seq[(String, String)]): String =
+      kvs.map { case (k, v) => str(k) + ":" + v }.mkString("{", ",", "}")
+    def times(ts: Seq[(String, Double)]): String =
+      obj(ts.map { case (n, t) => n -> num(t) })
+    val medians = rs.map(r => r.name -> r.countMedian)
+    val noops = rs.map(r => r.name -> r.noopMedian)
+    val cold = rs.map(r => r.name -> r.cold)
+    // block totals partition the headline: batch (the engine-speed
+    // signal — registry operators only), streaming (fixed micro-batch +
+    // state-store overhead), conformance (tpch + ssb, the externally
+    // comparable composites, also broken out individually)
+    def total(ts: Seq[(String, Double)], p: String => Boolean = _ => true): String =
+      num(ts.collect { case (n, t) if p(n) => t }.sum)
+    val errors = rs.flatMap(r => r.error.map(r.name -> _))
+    val retries = for (r <- rs; (p, n) <- r.taskFailures) yield s"$p:${r.name}" -> n
+    val head = Seq(
+      "metric" -> str("total"), "value" -> total(medians), "unit" -> str("sec"),
+      "value_noop" -> total(noops),
+      "batch_total" -> total(medians, isBatch),
+      "streaming_total" -> total(medians, isStreaming),
+      "conformance_total" -> total(medians, isConformance),
+      "tpch_total" -> total(medians, isTpch), "ssb_total" -> total(medians, isSsb))
+    val coldTotal = "cold_total" -> total(cold)
+    val nQueries = "n_queries" -> rs.size.toString
+    val taskRetries = "task_retries" -> retries.map(_._2).sum.toString
+    val sf = "sf" -> str(sfDir)
+    val detail = obj(head ++ Seq(
+      "queries" -> times(medians),
+      "noop" -> times(noops),
+      "cold" -> times(cold),
+      coldTotal, nQueries,
+      "errors" -> obj(errors.map { case (n, e) => n -> str(e) }),
+      taskRetries,
+      "task_retries_by_pass_query" -> obj(retries.map { case (k, n) => k -> n.toString }),
+      "first_task_error" -> str(run.firstTaskError), sf))
+    val line = obj(head ++ Seq(coldTotal, nQueries,
+      "n_errors" -> errors.size.toString, taskRetries,
+      "first_task_error" -> str(run.firstTaskError.take(150)),
+      "queries" -> times(medians), sf))
+    (detail, line)
+  }
 
   def main(args: Array[String]): Unit = {
     val missing = missingHeadline
@@ -471,117 +502,23 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Session.local()
     spark.sparkContext.setLogLevel("ERROR")
-    val taskFailures = new TaskFailureListener
-    spark.sparkContext.addSparkListener(taskFailures)
-
-    // start from a cold shared cache: the cold pass below then measures
-    // the pipeline builds, and prior runs can't contaminate the timings
+    // start from a cold shared cache: the cold pass then measures the
+    // pipeline builds, and prior runs can't contaminate the timings
     domain.SharedCache.clear(spark)
-
-    // SPARK_GRAFT_BENCH_ONLY=<substring>[,…] restricts the headline for
-    // fast local timing iteration; the driver never sets it.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(',').toSeq)
-    val qs = headline.filter(n => only.forall(_.exists(n.contains)))
-    // a failing query must FAIL the bench, not time as ~0s and read as a
-    // speedup — record the error per query and exit nonzero at the end
-    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    // per-(pass, query) task-retry attribution: which measurement a
-    // retry storm actually landed in, recorded next to the timing it
-    // contaminated
-    val retries = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    def timeOne(n: String, pass: String): Double = {
-      val f0 = taskFailures.failed.get()
-      val t0 = System.nanoTime()
-      try Registry.byName(n).run(spark, sfDir).count()
-      catch {
-        case e: Throwable =>
-          errors.getOrElseUpdate(n, s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(200)}")
-      }
-      val dt = (System.nanoTime() - t0) / 1e9
-      val df = taskFailures.failed.get() - f0
-      if (df > 0) retries.update(s"$pass:$n", df)
-      dt
-    }
-    // Between passes, give the ContextCleaner a chance to actually run:
-    // the iterative operators (CC, PageRank, PCA, spectral) localCheckpoint
-    // per round, and those RDD blocks are only released when a JVM GC
-    // collects their references. Across ~580 query executions on a large
-    // heap that almost never GCs on its own, stale blocks pile up in the
-    // block manager and later queries pay eviction churn — measured as a
-    // broad +0.3–0.8 s smear on mid-size queries in the full run that
-    // vanishes when the same queries run in isolation. An explicit GC at
-    // pass boundaries (never inside a timed region) keeps each pass's
-    // measurements independent of how many queries ran before it.
-    def sweep(): Unit = { System.gc(); Thread.sleep(500) }
-    val cold = qs.map(n => n -> timeOne(n, "cold"))
-    // PIN pass (untimed): r07 showed a cache-backed query (d_dedup_clusters)
-    // swinging 0.9↔4.2 s warm on identical code — a shared-cache build
-    // that failed mid-cold-pass (task retry) lacks its _SUCCESS marker
-    // and gets silently rebuilt inside a TIMED warm pass. This pass runs
-    // every query once more, untimed, so by the first timed warm pass
-    // every materialised artifact is complete and every codegen class is
-    // compiled: the warm medians measure steady state only.
-    sweep(); qs.foreach(n => timeOne(n, "pin"))
-    val warm = (1 to 3).map { i =>
-      sweep(); qs.map(n => n -> timeOne(n, s"warm$i"))
-    }
-    val medians = qs.map { n =>
-      val ts = warm.map(_.toMap.apply(n)).sorted
-      n -> ts(ts.length / 2)
-    }
-
-    def esc(s: String): String =
-      s.replace("\\", "\\\\").replace("\"", "\\\"")
-        .flatMap(c => if (c < ' ') f"\\u${c.toInt}%04x" else c.toString)
-    def fmt(kvs: Seq[(String, Double)]): String = kvs
-      .map { case (k, v) => "\"" + k + f"""\":$v%.3f""" }
-      .mkString("{", ",", "}")
-    def fmtErrs: String = errors
-      .map { case (k, v) => "\"" + k + "\":\"" + esc(v) + "\"" }
-      .mkString("{", ",", "}")
-    def fmtRetries: String = retries
-      .map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val total = medians.map(_._2).sum
-    val coldTotal = cold.map(_._2).sum
-    // block totals partition the headline: batch (the engine-speed
-    // signal — registry operators only), streaming (fixed micro-batch +
-    // state-store overhead), conformance (tpch + ssb, the externally
-    // comparable composites, also broken out individually)
-    def blockTotal(p: String => Boolean): Double =
-      medians.collect { case (n, t) if p(n) => t }.sum
-    val batchTotal = blockTotal(isBatch)
-    val streamingTotal = blockTotal(isStreaming)
-    val tpchTotal = blockTotal(isTpch)
-    val ssbTotal = blockTotal(isSsb)
-    val confTotal = blockTotal(isConformance)
-    val taskRetries = taskFailures.failed.get()
-    val firstTaskError = esc(taskFailures.firstReason)
-    val blocks =
-      f""""batch_total":$batchTotal%.3f,"streaming_total":$streamingTotal%.3f,"conformance_total":$confTotal%.3f,"tpch_total":$tpchTotal%.3f,"ssb_total":$ssbTotal%.3f"""
-    // full per-query warm/cold detail + per-pass retry attribution goes
-    // to BENCH_OUT.json …
-    val detail =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec",$blocks,"queries":${fmt(medians)},"cold":${fmt(cold)},"cold_total":$coldTotal%.3f,"n_queries":${qs.length},"errors":$fmtErrs,"task_retries":$taskRetries,"task_retries_by_pass_query":$fmtRetries,"first_task_error":"$firstTaskError","sf":"$sfDir"}"""
+    val run = tools.Probe.run(spark, sfDir, headline.map(Registry.byName))
+    val (detail, line) = render(run, sfDir)
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_OUT.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(out),
       (detail + "\n").getBytes("UTF-8"))
     catch { case _: Throwable => () }
-    // … and the FINAL stdout line carries the same per-query warm medians
-    // (additions-only vs the r01–r08 series: every old field is unchanged).
-    // History: rounds 4–8 printed a compact summary because rounds 1–3 had
-    // outgrown a ~2.2 KB driver stdout-tail and recorded "parsed": null —
-    // but the driver contract asks for the "queries" map on stdout, and
-    // PERF_r08 could not compare or scale-attribute a single query without
-    // it (r08 VERDICT item 2), so it goes back on the line. `task_retries`
-    // + the first failure header still ride along so a slow round is
-    // attributable from this line alone.
-    val line =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec",$blocks,"cold_total":$coldTotal%.3f,"n_queries":${qs.length},"n_errors":${errors.size},"task_retries":$taskRetries,"first_task_error":"${firstTaskError.take(150)}","queries":${fmt(medians)},"sf":"$sfDir"}"""
+    // The FINAL stdout line carries the per-query warm medians, the block
+    // totals, `task_retries` and the first failure header, so a slow round
+    // is attributable from this line alone.
     println(line)
     spark.stop()
-    if (errors.nonEmpty) {
-      Console.err.println(s"bench FAILED queries: ${errors.keys.mkString(", ")}")
+    val failed = run.results.filter(_.error.nonEmpty)
+    if (failed.nonEmpty) {
+      Console.err.println(s"bench FAILED queries: ${failed.map(_.name).mkString(", ")}")
       sys.exit(1)
     }
   }

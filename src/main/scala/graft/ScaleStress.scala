@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Empirical scale-up evidence for the dedup family's Σ|block|² claims:
@@ -24,9 +24,9 @@ import org.apache.spark.sql.functions._
   *    Σ|block|² sum scales ×N) and appending the same digit to both
   *    sides of a within-block pair leaves edit distances unchanged.
   *
-  * Generated inputs land under target/scale/ (inside the repo; the
-  * read-only testdata tree is never touched) and are rebuilt only when
-  * absent.
+  * Generated inputs land under target/scale/<source dir key>/ (inside
+  * the repo; the read-only testdata tree is never touched; see
+  * [[scaleDirOf]]) and are rebuilt only when absent.
   */
 object ScaleStress {
 
@@ -92,6 +92,38 @@ object ScaleStress {
     s.read.parquet(out)
   }
 
+  /** Per-shard key offsets of [[replicate]]: each shard's copy of a key
+    * column adds shard × its stride, so the copies' key spaces are
+    * disjoint and every per-key structure (a user's events, an order's
+    * lines, a customer's versions) replicates ×N instead of merging.
+    */
+  private val strides: Map[String, Long] = Map(
+    "event_id" -> 1000000000000L, "user_id" -> 100000000L,
+    "o_orderkey" -> 1000000000L, "l_orderkey" -> 1000000000L,
+    "o_custkey" -> 10000000L, "c_custkey" -> 10000000L,
+    "l_partkey" -> 100000000L, "p_partkey" -> 100000000L,
+    "l_suppkey" -> 1000000L, "s_suppkey" -> 1000000L)
+
+  /** Writes `src` ×f to `out` in 32 files: one copy per shard, each
+    * column named in [[strides]] offset, the others copied as they are.
+    */
+  private def replicate(src: DataFrame, f: Int, out: String): Unit = {
+    val shard = col("shard").cast("long")
+    src.crossJoin(src.sparkSession.range(f).select(col("id").cast("int").as("shard")))
+      .select(src.columns.toSeq.map(c =>
+        strides.get(c).fold(col(c))(k => (col(c) + shard * k).as(c))): _*)
+      .repartition(32)
+      .write.mode(SaveMode.Overwrite).parquet(out)
+  }
+
+  /** `cols` of `table` in `dir`, ×f at `out`; written only when absent. */
+  private def replicated(s: SparkSession, dir: String, table: String,
+      cols: Seq[Column], f: Int, out: String): DataFrame = {
+    if (!new java.io.File(out).exists())
+      replicate(s.read.parquet(s"$dir/$table.parquet").select(cols: _*), f, out)
+    s.read.parquet(out)
+  }
+
   /** ×N events: shard-disjoint user populations (user/event ids offset
     * per shard, timestamps unchanged) — per-user event structure is
     * preserved exactly, so the as-of match count scales ×N and the
@@ -99,162 +131,83 @@ object ScaleStress {
     * an event stream actually grows.
     */
   private def scaledEvents(s: SparkSession, dir: String, factor: Int,
-      out: String): DataFrame = {
-    if (!new java.io.File(out).exists()) {
-      val ev = s.read.parquet(s"$dir/events.parquet")
-        .select(col("event_id"), col("ts").cast("timestamp").as("ts"),
-          col("user_id"), col("event_type"))
-      val shards = s.range(factor).select(col("id").cast("int").as("shard"))
-      ev.crossJoin(shards)
-        .select(
-          (col("event_id") + col("shard").cast("long") * 1000000000000L)
-            .as("event_id"),
-          col("ts"),
-          (col("user_id") + col("shard").cast("long") * 100000000L)
-            .as("user_id"),
-          col("event_type"))
-        .repartition(32)
-        .write.mode(SaveMode.Overwrite).parquet(out)
-    }
-    s.read.parquet(out)
-  }
+      out: String): DataFrame =
+    replicated(s, dir, "events", Seq(col("event_id"),
+      col("ts").cast("timestamp").as("ts"), col("user_id"), col("event_type")),
+      factor, out)
 
   /** ×N events WITH the value column (the batch-23+ statistics need
     * it); same shard-disjoint user/event key offsets as scaledEvents —
     * separate output name so the older cached frames stay valid.
     */
   private def scaledEventsV(s: SparkSession, dir: String, factor: Int,
-      out: String): DataFrame = {
-    if (!new java.io.File(out).exists()) {
-      val ev = s.read.parquet(s"$dir/events.parquet")
-        .select(col("event_id"), col("ts").cast("timestamp").as("ts"),
-          col("user_id"), col("event_type"), col("value"))
-      val shards = s.range(factor).select(col("id").cast("int").as("shard"))
-      ev.crossJoin(shards)
-        .select(
-          (col("event_id") + col("shard").cast("long") * 1000000000000L)
-            .as("event_id"),
-          col("ts"),
-          (col("user_id") + col("shard").cast("long") * 100000000L)
-            .as("user_id"),
-          col("event_type"), col("value"))
-        .repartition(32)
-        .write.mode(SaveMode.Overwrite).parquet(out)
-    }
-    s.read.parquet(out)
-  }
+      out: String): DataFrame =
+    replicated(s, dir, "events", Seq(col("event_id"),
+      col("ts").cast("timestamp").as("ts"), col("user_id"), col("event_type"),
+      col("value")), factor, out)
 
-  /** ×N lineitem/orders: shard-disjoint key spaces (order, part,
-    * supplier, customer keys all offset per shard, dates unchanged) —
+  /** ×N lineitem (and orders, in `main`): shard-disjoint key spaces
+    * (order, part, supplier, customer keys all offset per shard, dates
+    * unchanged) —
     * per-order and per-customer structure is preserved exactly, so the
     * cooc/incidence graphs become N disjoint copies (edges ×N, wedge
     * work ×N, NOT ×N²) and the SCD2 version chains replicate per
     * customer: "more entities", the way a fact table actually grows.
     */
   private def scaledLineitem(s: SparkSession, dir: String, factor: Int,
-      out: String): DataFrame = {
-    if (!new java.io.File(out).exists()) {
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
-        .select("l_orderkey", "l_partkey", "l_suppkey", "l_shipdate",
-          "l_extendedprice")
-      val shards = s.range(factor).select(col("id").cast("int").as("shard"))
-      li.crossJoin(shards)
-        .select(
-          (col("l_orderkey") + col("shard").cast("long") * 1000000000L)
-            .as("l_orderkey"),
-          (col("l_partkey") + col("shard").cast("long") * 100000000L)
-            .as("l_partkey"),
-          (col("l_suppkey") + col("shard").cast("long") * 1000000L)
-            .as("l_suppkey"),
-          col("l_shipdate"), col("l_extendedprice"))
-        .repartition(32)
-        .write.mode(SaveMode.Overwrite).parquet(out)
-    }
-    s.read.parquet(out)
+      out: String): DataFrame =
+    replicated(s, dir, "lineitem", Seq("l_orderkey", "l_partkey", "l_suppkey",
+      "l_shipdate", "l_extendedprice").map(col), factor, out)
+
+  /** Where inputs scaled from `sfDir` live under `root`: one directory
+    * per source, named after it plus a hash of its canonical path, so a
+    * run over one scale factor never reads inputs scaled from another.
+    */
+  private[graft] def scaleDirOf(root: String, sfDir: String): String = {
+    val src = new java.io.File(sfDir).getCanonicalFile
+    f"$root/${src.getName}-${src.getPath.hashCode}%08x"
   }
 
-  private def scaledOrders(s: SparkSession, dir: String, factor: Int,
-      out: String): DataFrame = {
-    if (!new java.io.File(out).exists()) {
-      val o = s.read.parquet(s"$dir/orders.parquet")
-        .select("o_orderkey", "o_custkey", "o_orderdate", "o_orderpriority")
-      val shards = s.range(factor).select(col("id").cast("int").as("shard"))
-      o.crossJoin(shards)
-        .select(
-          (col("o_orderkey") + col("shard").cast("long") * 1000000000L)
-            .as("o_orderkey"),
-          (col("o_custkey") + col("shard").cast("long") * 10000000L)
-            .as("o_custkey"),
-          col("o_orderdate"), col("o_orderpriority"))
-        .repartition(32)
-        .write.mode(SaveMode.Overwrite).parquet(out)
+  /** `dir`, first built by `build` unless its `_done` marker says an
+    * earlier run finished it.
+    */
+  private def builtOnce(dir: String)(build: => Unit): String = {
+    if (!new java.io.File(s"$dir/_done").exists()) {
+      build
+      new java.io.File(s"$dir/_done").createNewFile()
     }
-    s.read.parquet(out)
+    dir
   }
 
   /** ×f sf-shaped WAREHOUSE directory (orders/lineitem/part/supplier/
     * customer shard-replicated with MATCHING key offsets so per-shard
-    * join structure replicates; nation/region stay fixed — true dims).
-    * Registered queries run VERBATIM against it. Cached under
-    * `scaleDir/qdir_x<f>` with a `_done` marker; shared by the stress
-    * families here and by [[graft.tools.TpchScale]] (the sf1-equivalent
-    * conformance timing run).
+    * join structure replicates — ×f fact, ×f dims, same join
+    * selectivities; nation/region stay fixed — true dims). Registered
+    * queries run VERBATIM against it. Cached under
+    * `scaleDirOf(root, sfDir)/qdir_x<f>` with a `_done` marker; shared by
+    * the stress families here and by [[graft.tools.Scale]].
     */
   private[graft] def warehouseDir(spark: SparkSession, sfDir: String,
-      scaleDir: String, f: Int): String = {
-    val dir = s"$scaleDir/qdir_x$f"
-    if (!new java.io.File(s"$dir/_done").exists()) {
-      val sh = spark.range(f).select(col("id").cast("int").as("shard"))
-      spark.read.parquet(s"$sfDir/orders.parquet").crossJoin(sh).select(
-        (col("o_orderkey") + col("shard").cast("long") * 1000000000L)
-          .as("o_orderkey"),
-        (col("o_custkey") + col("shard").cast("long") * 10000000L)
-          .as("o_custkey"),
-        col("o_orderstatus"), col("o_totalprice"), col("o_orderdate"),
-        col("o_orderpriority"))
-        .repartition(32)
-        .write.mode(SaveMode.Overwrite).parquet(s"$dir/orders.parquet")
-      spark.read.parquet(s"$sfDir/customer.parquet").crossJoin(sh).select(
-        (col("c_custkey") + col("shard").cast("long") * 10000000L)
-          .as("c_custkey"),
-        col("c_name"), col("c_nationkey"), col("c_acctbal"),
-        col("c_mktsegment"))
-        .repartition(32)
-        .write.mode(SaveMode.Overwrite).parquet(s"$dir/customer.parquet")
-      // fact + remaining dims with MATCHING shard offsets, so the join
-      // structure replicates per shard (×f fact, ×f dims, same join
-      // selectivities); nation/region stay fixed — they are true dims
-      spark.read.parquet(s"$sfDir/lineitem.parquet").crossJoin(sh).select(
-        (col("l_orderkey") + col("shard").cast("long") * 1000000000L)
-          .as("l_orderkey"),
-        (col("l_partkey") + col("shard").cast("long") * 100000000L)
-          .as("l_partkey"),
-        (col("l_suppkey") + col("shard").cast("long") * 1000000L)
-          .as("l_suppkey"),
-        col("l_linenumber"), col("l_quantity"), col("l_extendedprice"),
-        col("l_discount"), col("l_tax"), col("l_returnflag"),
-        col("l_linestatus"), col("l_shipdate"))
-        .repartition(32)
-        .write.mode(SaveMode.Overwrite).parquet(s"$dir/lineitem.parquet")
-      spark.read.parquet(s"$sfDir/part.parquet").crossJoin(sh).select(
-        (col("p_partkey") + col("shard").cast("long") * 100000000L)
-          .as("p_partkey"),
-        col("p_name"), col("p_brand"), col("p_type"), col("p_size"),
-        col("p_retailprice"))
-        .repartition(32)
-        .write.mode(SaveMode.Overwrite).parquet(s"$dir/part.parquet")
-      spark.read.parquet(s"$sfDir/supplier.parquet").crossJoin(sh).select(
-        (col("s_suppkey") + col("shard").cast("long") * 1000000L)
-          .as("s_suppkey"),
-        col("s_name"), col("s_nationkey"), col("s_acctbal"))
-        .repartition(32)
-        .write.mode(SaveMode.Overwrite).parquet(s"$dir/supplier.parquet")
+      root: String, f: Int): String = {
+    val dir = s"${scaleDirOf(root, sfDir)}/qdir_x$f"
+    def table(t: String, cols: String*): Unit = replicate(
+      spark.read.parquet(s"$sfDir/$t.parquet").select(cols.map(col): _*), f,
+      s"$dir/$t.parquet")
+    builtOnce(dir) {
+      table("orders", "o_orderkey", "o_custkey", "o_orderstatus",
+        "o_totalprice", "o_orderdate", "o_orderpriority")
+      table("customer", "c_custkey", "c_name", "c_nationkey", "c_acctbal",
+        "c_mktsegment")
+      table("lineitem", "l_orderkey", "l_partkey", "l_suppkey",
+        "l_linenumber", "l_quantity", "l_extendedprice", "l_discount",
+        "l_tax", "l_returnflag", "l_linestatus", "l_shipdate")
+      table("part", "p_partkey", "p_name", "p_brand", "p_type", "p_size",
+        "p_retailprice")
+      table("supplier", "s_suppkey", "s_name", "s_nationkey", "s_acctbal")
       for (t <- Seq("nation", "region"))
         spark.read.parquet(s"$sfDir/$t.parquet")
           .write.mode(SaveMode.Overwrite).parquet(s"$dir/$t.parquet")
-      new java.io.File(s"$dir/_done").createNewFile()
     }
-    dir
   }
 
   def main(args: Array[String]): Unit = {
@@ -266,7 +219,8 @@ object ScaleStress {
     // hermetic: the dedup-cluster pipeline memoises through SharedCache
     domain.SharedCache.clear(spark)
 
-    val scaleDir = "target/scale"
+    val scaleRoot = "target/scale"
+    val scaleDir = scaleDirOf(scaleRoot, sfDir)
     new java.io.File(scaleDir).mkdirs()
 
     // ×1 inputs go through the same generator (1 shard) so both scales
@@ -373,9 +327,12 @@ object ScaleStress {
     val li1 = scaledLineitem(spark, sfDir, 1, s"$scaleDir/li_x1.parquet")
     val liN = scaledLineitem(spark, sfDir, factor,
       s"$scaleDir/li_x$factor.parquet")
-    val or1 = scaledOrders(spark, sfDir, 1, s"$scaleDir/ord_x1.parquet")
-    val orN = scaledOrders(spark, sfDir, factor,
-      s"$scaleDir/ord_x$factor.parquet")
+    def orders(name: String, f: Int, cols: String*) = replicated(spark,
+      sfDir, "orders", cols.map(col), f, s"$scaleDir/${name}_x$f.parquet")
+    val or1 = orders("ord", 1, "o_orderkey", "o_custkey", "o_orderdate",
+      "o_orderpriority")
+    val orN = orders("ord", factor, "o_orderkey", "o_custkey", "o_orderdate",
+      "o_orderpriority")
     // warmups on the small corpus
     similarity.PowerIteration.topComponent(warmE).count()
     operators.TemporalJoin.temporalAgg(
@@ -581,23 +538,8 @@ object ScaleStress {
     // table; durations replicate so strata count is CONSTANT), ratio CI
     // (one user-keyed agg), Good–Turing (vocab-bounded count-of-counts;
     // shard tokens add ~1 stratum) ----
-    def ordersP(f: Int) = {
-      val out = s"$scaleDir/ord_p_x$f.parquet"
-      if (!new java.io.File(out).exists()) {
-        val o = spark.read.parquet(s"$sfDir/orders.parquet")
-          .select("o_orderkey", "o_custkey", "o_totalprice")
-        val sh = spark.range(f).select(col("id").cast("int").as("shard"))
-        o.crossJoin(sh).select(
-          (col("o_orderkey") + col("shard").cast("long") * 1000000000L)
-            .as("o_orderkey"),
-          (col("o_custkey") + col("shard").cast("long") * 10000000L)
-            .as("o_custkey"),
-          col("o_totalprice"))
-          .repartition(32)
-          .write.mode(SaveMode.Overwrite).parquet(out)
-      }
-      spark.read.parquet(out)
-    }
+    def ordersP(f: Int) =
+      orders("ord_p", f, "o_orderkey", "o_custkey", "o_totalprice")
     val evv1 = scaledEventsV(spark, sfDir, 1, s"$scaleDir/events_v_x1.parquet")
     val evvN = scaledEventsV(spark, sfDir, factor,
       s"$scaleDir/events_v_x$factor.parquet")
@@ -631,23 +573,8 @@ object ScaleStress {
     // ---- batch-28/33 family: QTE (arm × cents strata), cohort LTV
     // (two corpus-keyed shuffles), Rocchio PRF (tokenize-once inverted
     // index; shard tokens join the vocabulary) ----
-    def ordersPD(f: Int) = {
-      val out = s"$scaleDir/ord_pd_x$f.parquet"
-      if (!new java.io.File(out).exists()) {
-        val o = spark.read.parquet(s"$sfDir/orders.parquet")
-          .select("o_orderkey", "o_custkey", "o_orderdate", "o_totalprice")
-        val sh = spark.range(f).select(col("id").cast("int").as("shard"))
-        o.crossJoin(sh).select(
-          (col("o_orderkey") + col("shard").cast("long") * 1000000000L)
-            .as("o_orderkey"),
-          (col("o_custkey") + col("shard").cast("long") * 10000000L)
-            .as("o_custkey"),
-          col("o_orderdate"), col("o_totalprice"))
-          .repartition(32)
-          .write.mode(SaveMode.Overwrite).parquet(out)
-      }
-      spark.read.parquet(out)
-    }
+    def ordersPD(f: Int) = orders("ord_pd", f, "o_orderkey", "o_custkey",
+      "o_orderdate", "o_totalprice")
     val evq1 = scaledEventsV(spark, sfDir, 1, s"$scaleDir/events_v_x1.parquet")
     val evqN = scaledEventsV(spark, sfDir, factor,
       s"$scaleDir/events_v_x$factor.parquet")
@@ -698,16 +625,11 @@ object ScaleStress {
     // and anti-join, interrupted-TS's daily agg, meta-analysis's
     // event_type agg and the generalization histogram all grow linearly
     // in INPUT at constant output) ----
-    def qdir(f: Int): String = warehouseDir(spark, sfDir, scaleDir, f)
+    def qdir(f: Int): String = warehouseDir(spark, sfDir, scaleRoot, f)
     // events for a100: reuse the value-carrying scaled events under the
     // sf-shaped dir name the registered query reads
-    def qdirEvents(f: Int): String = {
-      val dir = s"$scaleDir/qdir_ev_x$f"
-      if (!new java.io.File(s"$dir/_done").exists()) {
-        scaledEventsV(spark, sfDir, f, s"$dir/events.parquet")
-        new java.io.File(s"$dir/_done").createNewFile()
-      }
-      dir
+    def qdirEvents(f: Int): String = builtOnce(s"$scaleDir/qdir_ev_x$f") {
+      scaledEventsV(spark, sfDir, f, s"$scaleDir/qdir_ev_x$f/events.parquet"); ()
     }
     // CSLS corpus: sf0.01 base (500 vecs) so the ×10 r-pass stays a
     // 12.5M-pair stress, not a 1.25G-pair brute marathon — the measured
@@ -771,23 +693,13 @@ object ScaleStress {
     val qdir1 = qdir(1)
     val qdirN = qdir(factor)
     // embeddings under an sf-shaped dir for the registered-query runs
-    def qdirEmb(f: Int): String = {
-      val dir = s"$scaleDir/qdir_emb_x$f"
-      if (!new java.io.File(s"$dir/_done").exists()) {
-        scaledEmb(spark, sfDir, f, s"$dir/embeddings.parquet")
-        new java.io.File(s"$dir/_done").createNewFile()
-      }
-      dir
+    def qdirEmb(f: Int): String = builtOnce(s"$scaleDir/qdir_emb_x$f") {
+      scaledEmb(spark, sfDir, f, s"$scaleDir/qdir_emb_x$f/embeddings.parquet"); ()
     }
     val qe1 = qdirEmb(1); val qeN = qdirEmb(factor)
     statsWarm("d34_hyperball"); statsWarm("d_semantic_decontaminate")
-    def qdirDocs(f: Int): String = {
-      val dir = s"$scaleDir/qdir_docs_x$f"
-      if (!new java.io.File(s"$dir/_done").exists()) {
-        scaledDocs(spark, sfDir, f, s"$dir/documents.parquet")
-        new java.io.File(s"$dir/_done").createNewFile()
-      }
-      dir
+    def qdirDocs(f: Int): String = builtOnce(s"$scaleDir/qdir_docs_x$f") {
+      scaledDocs(spark, sfDir, f, s"$scaleDir/qdir_docs_x$f/documents.parquet"); ()
     }
     val qd1 = qdirDocs(1); val qdN = qdirDocs(factor)
     statsWarm("t_wordpiece_fertility")

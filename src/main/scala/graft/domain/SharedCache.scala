@@ -36,7 +36,7 @@ object SharedCache {
     * override per-call for cluster deployments (HDFS/S3A path).
     *
     * The root is PER-PROCESS (pid suffix): the harness mains (Verify,
-    * Bench, ScaleStress, ScaleTrades, tools.Probe) each start with
+    * Bench, ScaleStress, tools.Probe, tools.Scale) each start with
     * [[clear]] for hermeticity, and with a machine-global path a
     * concurrently running second harness would wipe the first one's
     * entries mid-run — observed as cache-backed queries silently
