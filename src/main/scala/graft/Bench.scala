@@ -23,8 +23,12 @@ package graft
   * would see for a repeated query), `noop` the warm noop-sink medians
   * (every column computed: count lets Catalyst prune aggregates and
   * windows), `cold` the first-pass times (what a one-off pipeline pays,
-  * builds included). `value` = sum of count medians, kept so the r01–r09
-  * series stays comparable; `value_noop` = sum of noop medians.
+  * builds included). `value` = sum of count medians, `value_noop` = sum of
+  * noop medians. `value` starts a new series with this protocol (r10): the
+  * pin pass was a count, no noop run sat between count reps and each GC
+  * sweep covered half as many runs, so r01–r09 values are not comparable
+  * with it (one full sf0.01 pair on 4 cores read 144.7 s before, 125.2 s
+  * after).
   */
 object Bench {
   // representative of each subsystem: scan+agg, joins, windows, dedup,
@@ -440,7 +444,7 @@ object Bench {
     headline.filterNot(Registry.byName.contains)
 
   /** BENCH_OUT.json's object and the stdout line for one run over `sfDir`.
-    * The line keeps every field of the r01–r09 series, in order;
+    * The line keeps every field of the r01–r09 lines, in order;
     * `value_noop` and BENCH_OUT.json's `noop` map are additions.
     */
   private[graft] def render(run: tools.Probe.Run, sfDir: String): (String, String) = {

@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   *    Σ|block|² sum scales ×N) and appending the same digit to both
   *    sides of a within-block pair leaves edit distances unchanged.
   *
-  * Generated inputs land under target/scale/<source dir key>/ (inside
+  * Generated inputs land under target/scale/<source dir name>/ (inside
   * the repo; the read-only testdata tree is never touched; see
   * [[scaleDirOf]]) and are rebuilt only when absent.
   */
@@ -160,13 +160,11 @@ object ScaleStress {
       "l_shipdate", "l_extendedprice").map(col), factor, out)
 
   /** Where inputs scaled from `sfDir` live under `root`: one directory
-    * per source, named after it plus a hash of its canonical path, so a
-    * run over one scale factor never reads inputs scaled from another.
+    * per source, named after it, so a run over one scale factor never
+    * reads inputs scaled from another.
     */
-  private[graft] def scaleDirOf(root: String, sfDir: String): String = {
-    val src = new java.io.File(sfDir).getCanonicalFile
-    f"$root/${src.getName}-${src.getPath.hashCode}%08x"
-  }
+  private[graft] def scaleDirOf(root: String, sfDir: String): String =
+    s"$root/${new java.io.File(sfDir).getCanonicalFile.getName}"
 
   /** `dir`, first built by `build` unless its `_done` marker says an
     * earlier run finished it.

@@ -33,6 +33,8 @@ import scala.util.control.NonFatal
   * ones included, is counted against the (pass, query) that ran it, since
   * a retry costs time while the query still succeeds. A query that throws
   * keeps its error and sits out the later passes; the others run them all.
+  * Each run prints a progress line (pass, query, seconds or error) to
+  * stderr as it ends, so a run cut short still shows what it measured.
   *
   * The main prints per query the cold time, warm count and noop medians,
   * GC seconds over the warm passes, task failures and the slowest stages
@@ -145,10 +147,14 @@ object Probe {
         val t0 = System.nanoTime()
         try action(a.q.run(spark, sfDir))
         catch {
-          case NonFatal(e) => a.error =
+          // a deep plan's StackOverflowError or a LinkageError fails the
+          // query, not the whole run
+          case e @ (NonFatal(_) | _: StackOverflowError | _: LinkageError) => a.error =
             Some(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(200)}")
         } finally sc.clearJobGroup()
         val secs = (System.nanoTime() - t0) / 1e9
+        Console.err.println(a.error.fold(f"[probe] $pass%-6s ${a.q.name} $secs%.2fs")(
+          e => f"[probe] $pass%-6s ${a.q.name} ERROR $e"))
         Bridge.drainListeners(sc)
         a.stages ++= log.take(g)
         val failed = log.takeFailures()

@@ -6,17 +6,19 @@ class ProbeSpec extends SparkSpec {
   private val names = Seq("a3_multikey_agg", "a5_topn_most_common")
   private val boom =
     Q("probe_spec_boom", (_, _) => throw new IllegalStateException("boom"), None)
+  private val overflow =
+    Q("probe_spec_overflow", (_, _) => throw new StackOverflowError("deep"), None)
   private val passes = Seq("cold", "pin") ++
     (1 to Probe.WarmPasses).flatMap(i => Seq(s"count$i", s"noop$i"))
 
-  // one run shared by the tests: the two real queries around a query that
-  // throws in its cold pass
+  // one run shared by the tests: the two real queries around two queries
+  // that throw in their cold pass
   private lazy val run = Probe.run(spark, sf("sf0.001"),
-    Seq(Registry.byName(names(0)), boom, Registry.byName(names(1))))
+    Seq(Registry.byName(names(0)), boom, overflow, Registry.byName(names(1))))
   private def ok = run.results.filter(_.error.isEmpty)
 
   test("each pass is timed and its stages stay in the query's own job groups") {
-    assert(run.results.map(_.name) == Seq(names(0), boom.name, names(1)))
+    assert(run.results.map(_.name) == Seq(names(0), boom.name, overflow.name, names(1)))
     assert(spark.sparkContext.getLocalProperty("spark.jobGroup.id") == null,
       "the probe must leave no job group behind")
     assert(ok.map(_.name) == names)
@@ -54,5 +56,11 @@ class ProbeSpec extends SparkSpec {
     assert(r.error.exists(_.contains("IllegalStateException: boom")), r.error)
     assert(r.count.isEmpty && r.noop.isEmpty && r.stages.isEmpty, r)
     assert(ok.size == 2)
+  }
+
+  test("a StackOverflowError fails only its query, not the run") {
+    val r = run.results.find(_.name == overflow.name).get
+    assert(r.error.exists(_.contains("StackOverflowError: deep")), r.error)
+    assert(r.count.isEmpty && r.noop.isEmpty, r)
   }
 }
