@@ -66,17 +66,15 @@ object Tables {
     * session, ≤ a few dirs × 10 tables plus cache entries) never reach
     * the cap, so bench behavior is unchanged.
     */
-  private[graft] def memo(spark: SparkSession, path: String): DataFrame =
-    if (sys.env.contains("SPARK_GRAFT_NO_RELCACHE")) spark.read.parquet(path)
-    else {
-      if (relationCache.size >= MaxRelations) {
-        relationCache.keySet.removeIf(
-          (k: (SparkSession, String)) => k._1.sparkContext.isStopped)
-        if (relationCache.size >= MaxRelations) relationCache.clear()
-      }
-      relationCache.computeIfAbsent(
-        (spark, path), _ => spark.read.parquet(path))
+  private[graft] def memo(spark: SparkSession, path: String): DataFrame = {
+    if (relationCache.size >= MaxRelations) {
+      relationCache.keySet.removeIf(
+        (k: (SparkSession, String)) => k._1.sparkContext.isStopped)
+      if (relationCache.size >= MaxRelations) relationCache.clear()
     }
+    relationCache.computeIfAbsent(
+      (spark, path), _ => spark.read.parquet(path))
+  }
 
   private[graft] val relationCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),

@@ -1,7 +1,11 @@
 package graft
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. Names after the
+  * two directories restrict the dump to those registry queries.
+  *
+  * Usage: graft.Verify <sf dir> <out dir> [names...]
+  */
 object Verify {
   /** Column types the driver's pandas canonicaliser cannot row-sort:
     * arrays/maps arrive as ndarrays/dicts (unhashable under lexsort) and
@@ -17,7 +21,16 @@ object Verify {
   }
 
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
+    val usage = "graft.Verify <sf dir> <out dir> [names...]"
+    if (args.length < 2) {
+      Console.err.println(s"usage: $usage")
+      sys.exit(2)
+    }
+    val (sfDir, outDir) = (args(0), args(1))
+    val selected =
+      if (args.length == 2) SparkEntry.queries.toSeq
+      else tools.Probe.named(args.toSeq.drop(2), usage).map(q => q.name -> q.run)
+    val keep = selected.map(_._1).toSet
     val spark = Session.local()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
@@ -25,12 +38,6 @@ object Verify {
     // process's materialisations (different SF, different logic version)
     // can never leak into the correctness run
     domain.SharedCache.clear(spark)
-    // SPARK_GRAFT_ONLY=<substring>[,<substring>…] restricts the dump for
-    // fast local iteration (a query is kept if ANY listed substring
-    // matches); the driver never sets it, so its runs stay complete.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSeq)
-    def keep(name: String) = only.forall(_.exists(name.contains))
-    val selected = SparkEntry.queries.filter { case (name, _) => keep(name) }
     var failed = List.empty[String]
     selected.foreach { case (name, fn) =>
       try {

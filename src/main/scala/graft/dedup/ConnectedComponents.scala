@@ -2,6 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType,
   StringType}
 import org.apache.spark.storage.StorageLevel
@@ -156,8 +157,10 @@ object ConnectedComponents {
 
     // one large-star + small-star alternation, lazily composed
     def alternate(in: DataFrame): DataFrame = {
-      // view the current graph undirected for the large-star step
-      val sym = in.union(in.select(col("v").as("u"), col("u").as("v")))
+      // view the current graph undirected for the large-star step (the
+      // union needs the checkpoint without its inherited constraints)
+      val plain = Bridge.withoutInheritedConstraints(in)
+      val sym = plain.union(plain.select(col("v").as("u"), col("u").as("v")))
       // large-star: connect every strictly-larger neighbor of u to the
       // minimum of u's neighborhood (including u itself)
       val mins = sym.groupBy("u")

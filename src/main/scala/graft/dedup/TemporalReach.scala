@@ -64,17 +64,15 @@ object TemporalReach {
     arr.filter(col("arr").isNotNull)
   }
 
-  /** @param supOffset keeps supplier ids out of the customer key
-    *   space; the stress harness passes a larger offset because its
-    *   sharded custkeys grow past the default.
+  /** Customer–supplier contacts; supplier ids are offset by
+    * [[SupOffset]] to stay out of the customer key space.
     */
-  def contacts(orders: DataFrame, lineitem: DataFrame,
-      supOffset: Long = SupOffset): DataFrame = {
+  def contacts(orders: DataFrame, lineitem: DataFrame): DataFrame = {
     val c = orders
       .join(lineitem.select(col("l_orderkey"), col("l_suppkey")),
         col("o_orderkey") === col("l_orderkey"))
       .select(col("o_custkey").as("cust"),
-        (col("l_suppkey") + supOffset).as("sup"),
+        (col("l_suppkey") + SupOffset).as("sup"),
         datediff(to_date(col("o_orderdate")),
           to_date(lit("1992-01-01"))).cast("long").as("t"))
       .distinct()

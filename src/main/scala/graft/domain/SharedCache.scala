@@ -36,7 +36,7 @@ object SharedCache {
     * override per-call for cluster deployments (HDFS/S3A path).
     *
     * The root is PER-PROCESS (pid suffix): the harness mains (Verify,
-    * Bench, ScaleStress, tools.Probe, tools.Scale) each start with
+    * Bench, tools.Probe, tools.Scale) each start with
     * [[clear]] for hermeticity, and with a machine-global path a
     * concurrently running second harness would wipe the first one's
     * entries mid-run — observed as cache-backed queries silently
@@ -51,11 +51,15 @@ object SharedCache {
   }
 
   /** Deletes [[defaultRoot]], so the next cached stage builds from
-    * scratch and no earlier run's entries reach this one.
+    * scratch and no earlier run's entries reach this one. The readers
+    * memoised over its entries go too: a rebuilt entry has new part
+    * files, and a kept reader would list the deleted ones.
     */
   def clear(spark: SparkSession): Unit = {
     val root = new Path(defaultRoot)
     root.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(root, true)
+    graft.Tables.relationCache.keySet.removeIf(
+      (k: (SparkSession, String)) => k._2.startsWith(s"$defaultRoot/"))
   }
 
   private def md5Hex(s: String): String =

@@ -92,11 +92,10 @@ object JaroWinkler {
     * the graded-name-agreement join `j15_record_linkage`'s binary
     * field comparison cannot express. Σ|block|² candidate work, the
     * same blocking argument as j13's fuzzy join — and the same
-    * LOW-cardinality-block salting: unsalted, the ×10 ScaleStress
+    * LOW-cardinality-block salting: unsalted, a ×10 scale-up
     * measured 18× wall for ×10 candidates (hot 2-token blocks pile
     * onto a few reducers once the dim side outgrows broadcast);
     * salted 32-way the verify is embarrassingly parallel per block.
-    * Public so the stress harness drives it with scaled tables.
     */
   def blockedJoin(part: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {

@@ -19,7 +19,7 @@ object ActiveUsers {
 
   val Ppm = 1000000L
 
-  /** The full series over any (user_id, ts) frame — ScaleStress entry. */
+  /** The full series over any (user_id, ts) frame. */
   def series(events: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
       val ud = events

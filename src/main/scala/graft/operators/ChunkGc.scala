@@ -15,9 +15,9 @@ import org.apache.spark.sql.functions._
   * those chunks; this operator is the safe plan.
   *
   * Chunks here are month-partitions; the content address is a multiset
-  * signature (row count + key sum + key square-sum, exact integers —
-  * collision-safe far beyond test scale; a production store uses the
-  * file checksum it already has). Three versions are derived
+  * signature (row count + key sum + key square-sum, exact integers, the
+  * square-sum in 38 digits — collision-safe far beyond test scale; a
+  * production store uses the file checksum it already has). Three versions are derived
   * deterministically (v2 drops `%997` keys from v1, v3 drops `%883`
   * from v2 — sparse edits, so most months ARE shared); retention keeps
   * v2+v3, and the plan is one anti join: v1's chunks minus the retained
@@ -32,7 +32,10 @@ object ChunkGc {
         month(col("o_orderdate"))).cast("long").as("month"))
       .agg(count(lit(1)).as("n_rows"),
         sum(col("o_orderkey")).as("ksum"),
-        sum(col("o_orderkey") * col("o_orderkey")).as("k2sum"))
+        // in 38 digits: a month of a few hundred orders overflows a long
+        // square-sum once keys pass ~2e8
+        sum(col("o_orderkey").cast("decimal(38,0)") * col("o_orderkey"))
+          .as("k2sum"))
       .select(lit(version).as("version"), col("month"), col("n_rows"),
         concat_ws(":", col("month"), col("n_rows"), col("ksum"),
           col("k2sum")).as("chunk_id"))
@@ -54,19 +57,19 @@ object ChunkGc {
         |  SELECT CAST(year(o_orderdate) * 100 + month(o_orderdate)
         |      AS BIGINT) AS month,
         |    count(*) AS n_rows, CAST(sum(o_orderkey) AS BIGINT) AS ksum,
-        |    CAST(sum(o_orderkey * o_orderkey) AS BIGINT) AS k2sum
+        |    sum(CAST(o_orderkey AS HUGEINT) * o_orderkey) AS k2sum
         |  FROM orders GROUP BY 1),
         |c2 AS (
         |  SELECT CAST(year(o_orderdate) * 100 + month(o_orderdate)
         |      AS BIGINT) AS month,
         |    count(*) AS n_rows, CAST(sum(o_orderkey) AS BIGINT) AS ksum,
-        |    CAST(sum(o_orderkey * o_orderkey) AS BIGINT) AS k2sum
+        |    sum(CAST(o_orderkey AS HUGEINT) * o_orderkey) AS k2sum
         |  FROM orders WHERE o_orderkey % 997 <> 0 GROUP BY 1),
         |c3 AS (
         |  SELECT CAST(year(o_orderdate) * 100 + month(o_orderdate)
         |      AS BIGINT) AS month,
         |    count(*) AS n_rows, CAST(sum(o_orderkey) AS BIGINT) AS ksum,
-        |    CAST(sum(o_orderkey * o_orderkey) AS BIGINT) AS k2sum
+        |    sum(CAST(o_orderkey AS HUGEINT) * o_orderkey) AS k2sum
         |  FROM orders WHERE o_orderkey % 997 <> 0
         |    AND o_orderkey % 883 <> 0 GROUP BY 1),
         |addr AS (

@@ -21,7 +21,7 @@ object CoPurchase {
 
   private val TopN = 20
 
-  /** Projection over any lineitem-shaped frame — ScaleStress entry.
+  /** Projection over any lineitem-shaped frame.
     *
     * Pair generation as per-order array combinations, NOT a self-join
     * (r08; the LinkPrediction.predict pattern, guide §2.4): one

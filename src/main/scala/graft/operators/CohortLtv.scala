@@ -23,9 +23,7 @@ import org.apache.spark.sql.types.DecimalType
   */
 object CohortLtv {
 
-  /** Cohort LTV over an orders frame. Exposed for the scale-stress
-    * harness.
-    */
+  /** Cohort LTV over an orders frame. */
   def compute(orders: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     {

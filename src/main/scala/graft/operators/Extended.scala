@@ -414,9 +414,7 @@ object Extended {
     * blocking-key-cardinality trap SCALING.md documents, and the salted
     * join is the standing fix when the key space is small.
     */
-  /** j13's pipeline over any (p_partkey, p_name) frame — public so the
-    * scale-stress harness can run it on a synthetically scaled table.
-    */
+  /** j13's pipeline over any (p_partkey, p_name) frame. */
   def fuzzyNameJoin(part: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
       val noun = element_at(

@@ -33,7 +33,7 @@ import org.apache.spark.sql.types.DecimalType
 object Gini {
 
   /** Gini over per-customer revenue; orders needs o_custkey +
-    * o_totalprice. Exposed for the scale-stress harness.
+    * o_totalprice.
     */
   def compute(orders: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {

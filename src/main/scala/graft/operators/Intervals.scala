@@ -33,9 +33,7 @@ object Intervals {
     * openers. Ties on start always co-island regardless of intra-tie
     * order, so the output is ordering-deterministic.
     */
-  /** Core merge over (k, start, end, oid) interval rows; public so the
-    * ×10 ScaleStress can drive it with synthetic inputs.
-    */
+  /** Core merge over (k, start, end, oid) interval rows. */
   def mergePerKey(iv: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     val w = Window.partitionBy("k").orderBy("start", "end", "oid")

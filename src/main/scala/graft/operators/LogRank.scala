@@ -29,7 +29,7 @@ object LogRank {
   private val BigPurchase = 90.0
 
   /** Log-rank χ² from an events frame (user_id, ts, event_type,
-    * value). Exposed for the scale-stress harness.
+    * value).
     */
   def compute(events: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {

@@ -21,9 +21,7 @@ import org.apache.spark.sql.functions._
   */
 object QuantileTreatment {
 
-  /** QTE over an events frame (user_id, value). Exposed for the
-    * scale-stress harness.
-    */
+  /** QTE over an events frame (user_id, value). */
   def compute(s: org.apache.spark.sql.SparkSession,
       events: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {

@@ -22,9 +22,7 @@ import org.apache.spark.sql.functions._
   */
 object RatioMetricCi {
 
-  /** Ratio CI from an events frame (user_id, value). Exposed for the
-    * scale-stress harness.
-    */
+  /** Ratio CI from an events frame (user_id, value). */
   def compute(events: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     {

@@ -67,9 +67,7 @@ object Sessions {
     * Union-tag both sides, order by (ts, kind) within user, and carry
     * the last seen view id forward — one shuffle on user_id, no
     * range-join explosion. kind sorts views before purchases at equal
-    * timestamps, matching ASOF's v.ts <= p.ts. Public over any events
-    * frame so the scale-stress harness can race it against the native
-    * exec.
+    * timestamps, matching ASOF's v.ts <= p.ts.
     */
   def asofComposed(e: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {

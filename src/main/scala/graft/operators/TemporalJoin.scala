@@ -56,9 +56,7 @@ object TemporalJoin {
         col("o_orderpriority").as("seg"))
   }
 
-  /** The full composition over any (orders, lineitem) pair — public so
-    * the scale-stress harness can race it on ×N inputs.
-    */
+  /** The full composition over any (orders, lineitem) pair. */
   def temporalAgg(orders: DataFrame, lineitem: DataFrame): DataFrame = {
     val versions = scd2Versions(orders)
     val facts = lineitem

@@ -113,8 +113,7 @@ object Csls {
     * 9/10 top-1 agreement with the exact form (CslsSpec gates ≥ 0.8).
     */
   /** The sampled re-ranking on an arbitrary embeddings frame (the
-    * registered query below over `Tables.embeddings`; ScaleStress runs
-    * it on the ×N corpus).
+    * registered query below over `Tables.embeddings`).
     */
   def rerankSampled(embeddings: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {

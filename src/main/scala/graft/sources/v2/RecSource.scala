@@ -729,8 +729,9 @@ object RecV2Query {
     },
     Some(
       s"""WITH ids AS (
-         |  SELECT $MinId + (p_partkey - 1) * $PerPart + j.j AS id
-         |  FROM part
+         |  SELECT $MinId + (k.k - 1) * $PerPart + j.j AS id
+         |  FROM (SELECT row_number() OVER (ORDER BY p_partkey) AS k
+         |        FROM part) k
          |  CROSS JOIN (SELECT unnest(generate_series(0, ${PerPart - 1}))
          |              AS j) j),
          |n AS (SELECT count(*) AS n FROM ids)

@@ -817,7 +817,17 @@ object StreamingOps {
         "graft_session_spool", Integer.toHexString(stamp.hashCode))
       Files.createDirectories(spool)
       val staged = spool.resolve("part-0.parquet")
-      if (!Files.exists(staged)) Files.copy(src, staged)
+      // a Spark-written table is a directory of part files: stage it as
+      // one file, so all the data is one micro-batch before the sentinels
+      if (!Files.exists(staged)) {
+        if (Files.isDirectory(src)) {
+          val tmp = spool.resolve("data_build")
+          raw.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+          val part = Files.list(tmp).iterator().asScala
+            .find(_.getFileName.toString.endsWith(".parquet")).get
+          Files.move(part, staged, StandardCopyOption.ATOMIC_MOVE)
+        } else Files.copy(src, staged)
+      }
       (1 to 2).foreach { k =>
         val sentinelFile = spool.resolve(s"part-$k.parquet")
         if (!Files.exists(sentinelFile)) {

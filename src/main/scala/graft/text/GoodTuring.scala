@@ -25,9 +25,7 @@ import org.apache.spark.sql.functions._
   */
 object GoodTuring {
 
-  /** GT table from a documents frame (text column). Exposed for the
-    * scale-stress harness.
-    */
+  /** GT table from a documents frame (text column). */
   def table(documents: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     {

@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   */
 object JensenShannon {
 
-  /** JSD over any (doc_id, text) frame — the ScaleStress entry point. */
+  /** JSD over any (doc_id, text) frame. */
   def jsd(docs: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
       val tok = docs

@@ -54,9 +54,7 @@ object Rocchio {
           .cast("int"))
   }
 
-  /** Full two-round PRF over a documents frame. Exposed for the
-    * scale-stress harness.
-    */
+  /** Full two-round PRF over a documents frame. */
   def prf(s: org.apache.spark.sql.SparkSession,
       documents: DataFrame): DataFrame = {
     {

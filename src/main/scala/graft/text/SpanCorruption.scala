@@ -33,9 +33,7 @@ object SpanCorruption {
       md5(concat(col("doc_id").cast("string"), lit(":"),
         p.cast("string"))), 1, 1).isin("0", "1")
 
-  /** The full corruption over any (doc_id, text) frame — the
-    * ScaleStress entry point.
-    */
+  /** The full corruption over any (doc_id, text) frame. */
   def corrupt(docs: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     val base = docs.select(col("doc_id"), split(col("text"), " ").as("w"))

@@ -1,20 +1,19 @@
 package graft.tools
 
 import graft.Q
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.functions._
 
 /** Scaling curve of the named registry queries: [[Probe.run]] over the
-  * shard-replicated warehouse `ScaleStress.warehouseDir` builds from
-  * `sfDir` at ×1 and at ×factor (matching key offsets, so join
-  * selectivities replicate per shard; nation/region stay fixed), with
-  * `ScaleStress.scaledEmb` embeddings beside the tables. Generation is
-  * excluded from the timings. An untimed runner pass over ×1 comes first,
-  * so the JIT and codegen are warm before anything is timed; then one
-  * runner call times each query at ×1 and right after at ×factor, in
-  * every pass (timing the scales one after the other read ×2 faster than
-  * ×1: the later scale ran in a warmer JVM). The cache is cleared after
-  * the warmup, so each cold run carries its own SharedCache builds.
-  * Scaled inputs are kept under
-  * `target/scale/<source dir name>/` and reused.
+  * ×1 and ×factor sf directories [[warehouse]] builds from `sfDir`.
+  * Generation is excluded from the timings. An untimed runner pass over
+  * ×1 comes first, so the JIT and codegen are warm before anything is
+  * timed; then one runner call times each query at ×1 and right after at
+  * ×factor, in every pass (timing the scales one after the other read ×2
+  * faster than ×1: the later scale ran in a warmer JVM). The cache is
+  * cleared after the warmup, so each cold run carries its own SharedCache
+  * builds. Scaled directories are kept under
+  * `target/scale/<source dir name>/wh_x<f>` and reused.
   *
   * Prints one JSON line per (query, scale) with the cold time and the warm
   * count and noop medians, a ratio line per query, and TOTAL lines over
@@ -27,6 +26,97 @@ import graft.Q
   * Run: `sbt "runMain graft.tools.Scale <sfDir> <factor> <names...>"`.
   */
 object Scale {
+
+  /** Every table [[graft.Tables]] reads. */
+  val tables: Seq[String] = Seq("region", "nation", "customer", "supplier",
+    "part", "orders", "lineitem", "events", "documents", "embeddings")
+
+  /** True dimensions, copied unchanged. */
+  private val fixed = Set("region", "nation")
+
+  /** Per-shard key offsets: each shard's copy of a key column adds
+    * shard × its stride, so the copies' key spaces are disjoint and every
+    * per-key structure (a user's events, an order's lines, a customer's
+    * versions) replicates ×f instead of merging. A foreign key has its
+    * primary key's stride, so join selectivities replicate per shard;
+    * `doc_id` and `vec_id` share one, since `t_hybrid_retrieval` fuses
+    * them. Customer keys step by 1e8, not 1e7, because
+    * `d32_temporal_reachability` numbers suppliers from 1e7 up: at 1e7,
+    * shard 1's customers would be shard 0's suppliers.
+    */
+  private val strides: Map[String, Long] = Map(
+    "event_id" -> 1000000000000L, "user_id" -> 100000000L,
+    "o_orderkey" -> 1000000000L, "l_orderkey" -> 1000000000L,
+    "o_custkey" -> 100000000L, "c_custkey" -> 100000000L,
+    "l_partkey" -> 100000000L, "p_partkey" -> 100000000L,
+    "l_suppkey" -> 1000000L, "s_suppkey" -> 1000000L,
+    "doc_id" -> 100000000L, "vec_id" -> 100000000L)
+
+  /** `src` ×f: one copy per shard, each column named in [[strides]]
+    * offset, the others copied as they are except where a verbatim copy
+    * would multiply every duplicate group's size and inflate the pair
+    * space quadratically (a different workload, not a bigger one):
+    *  - `text`: shard i inserts the token `shard<i>` after every 10 words.
+    *    Two near-duplicates in one shard get the same insertions, so their
+    *    Jaccard stays about the same; across shards the tokens differ in
+    *    every shingle window, which drops a document's cross-shard Jaccard
+    *    to about 0.6, under the 0.8 threshold: pairs scale ×f, not ×f².
+    *    `n_chars` is the new text's length.
+    *  - `p_name`: shard i appends its index. Names are two words, so the
+    *    suffix rides inside both j13's last-word blocks and j25's
+    *    first-two-word blocks: block count ×f at constant block size, and
+    *    a within-block pair keeps its edit distance.
+    *  - `embedding`: a per-shard elementwise perturbation, so copies are
+    *    distinct vectors with the same scale and labels (exact copies
+    *    would collapse ANN ranking into tie-breaks).
+    * Every shard, shard 0 included, gets the same treatment, so ×1 and ×f
+    * carry the same perturbation and their ratio isolates size.
+    */
+  private def scaled(src: DataFrame, f: Int): DataFrame = {
+    val shard = col("shard")
+    val words = split(col("text"), " ")
+    val text = concat_ws(" ", flatten(transform(
+      sequence(lit(0), greatest((size(words) + 9) / 10 - 1, lit(0)).cast("int")),
+      i => concat(slice(words, i * 10 + 1, lit(10)),
+        array(concat(lit("shard"), shard))))))
+    def column(c: String): Column = c match {
+      case "text" => text
+      case "n_chars" => length(text).cast("long")
+      case "p_name" => concat(col(c), shard)
+      case "embedding" => expr("""transform(embedding, (x, i) ->
+          |  CAST(x + 0.01d * ((shard * 31 + i) % 7 - 3) AS FLOAT))""".stripMargin)
+      case _ => strides.get(c).fold(col(c))(k => col(c) + shard.cast("long") * k)
+    }
+    src.crossJoin(src.sparkSession.range(f).select(col("id").cast("int").as("shard")))
+      .select(src.columns.toSeq.map(c => column(c).as(c)): _*)
+      .repartition(32)
+  }
+
+  /** Where inputs scaled from `sfDir` live under `root`: one directory
+    * per source, named after it, so a run over one scale factor never
+    * reads inputs scaled from another.
+    */
+  private[graft] def scaleDirOf(root: String, sfDir: String): String =
+    s"$root/${new java.io.File(sfDir).getCanonicalFile.getName}"
+
+  /** The ×f sf directory of `sfDir` under `root`: all of [[tables]] with
+    * every column, the dimensions fixed and the others [[scaled]], so
+    * registry queries, Verify and `tools/check.py` run on it as they are.
+    * A table is built unless its own `_SUCCESS` marker exists, so a
+    * directory that an interrupted or older run left is completed, not
+    * trusted.
+    */
+  def warehouse(spark: SparkSession, sfDir: String, root: String,
+      f: Int): String = {
+    val dir = s"${scaleDirOf(root, sfDir)}/wh_x$f"
+    for (t <- tables if !new java.io.File(s"$dir/$t.parquet/_SUCCESS").exists) {
+      val src = spark.read.parquet(s"$sfDir/$t.parquet")
+      (if (fixed(t)) src else scaled(src, f))
+        .write.mode(SaveMode.Overwrite).parquet(s"$dir/$t.parquet")
+    }
+    dir
+  }
+
   def main(args: Array[String]): Unit = {
     val usage = "graft.tools.Scale <sf dir> <factor> <names...>"
     val factor = args.lift(1).flatMap(_.toIntOption).filter(_ >= 1).getOrElse {
@@ -40,11 +130,7 @@ object Scale {
 
     val scales = Seq(1, factor)
     // build every scaled input BEFORE any timing
-    val dirs = scales.map { x =>
-      val dir = graft.ScaleStress.warehouseDir(spark, sfDir, "target/scale", x)
-      graft.ScaleStress.scaledEmb(spark, sfDir, x, s"$dir/embeddings.parquet")
-      dir
-    }
+    val dirs = scales.map(warehouse(spark, sfDir, "target/scale", _))
     Probe.run(spark, dirs.head, qs) // warmup, discarded
     graft.domain.SharedCache.clear(spark)
     // one run holding each query once per scale, side by side in every

@@ -33,6 +33,28 @@ object Bridge {
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[
       org.apache.spark.sql.Row]].queryExecution.analyzed
 
+  /** A checkpointed `df` re-made without the constraints it inherited
+    * from the plan it cut; the rows, partitioning and size estimate stay.
+    * Spark matches the inherited constraints to the output by attribute
+    * with nullability, so when the cut plan filtered a column to
+    * non-null, a renewed copy of the leaf (a self-union or self-join
+    * renews one) keeps constraints on the old attribute id, and a `Union`
+    * over it fails its constraint rewrite with `key not found`. Any other
+    * `df` is returned as it is.
+    */
+  def withoutInheritedConstraints(df: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = analyzed(df) match {
+    case r: org.apache.spark.sql.execution.LogicalRDD =>
+      val spark = df.sparkSession
+        .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      // built anew, not by `transform`: LogicalRDD's equality ignores
+      // the constraints, so a transform would keep the old node
+      ofRows(spark, org.apache.spark.sql.execution.LogicalRDD(r.output, r.rdd,
+        r.outputPartitioning, r.outputOrdering, r.isStreaming)(
+        spark, Some(r.computeStats())))
+    case _ => df
+  }
+
   /** Blocks until every queued listener event has been delivered, so a
     * listener read after an action has seen all of that action's stages.
     */

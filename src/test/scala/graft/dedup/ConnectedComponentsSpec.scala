@@ -54,6 +54,22 @@ class ConnectedComponentsSpec extends CcFinishes {
     assert(got.values.toSet == Set(100L))
   }
 
+  test("the loop labels a cached, filtered, computed edge frame") {
+    import org.apache.spark.sql.functions.{col, when}
+    // chains of ten: id → id − 1 except at multiples of ten, where `dst` is
+    // null and the filter drops the row
+    val edges = spark.range(0, 60)
+      .select(col("id").as("src"),
+        when(col("id") % 10 =!= 0, col("id") - 1).as("dst"))
+      .filter(col("dst") >= 0)
+    for (frame <- Seq(edges.cache(), edges.localCheckpoint())) {
+      val got = onLoop(ConnectedComponents.run(frame)).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == (0L until 60L).map(i => i -> (i / 10 * 10)).toMap)
+    }
+    edges.unpersist()
+  }
+
   // U+FF61 is EF BD A1 in UTF-8 but 0xFF61 in UTF-16; U+1F600 is F0 9F 98 80
   // in UTF-8 but the surrogate 0xD83D first in UTF-16 — so Spark's min
   // (UTF-8 bytes) and java.lang.String#compareTo (UTF-16) disagree

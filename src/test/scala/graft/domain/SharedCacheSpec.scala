@@ -28,6 +28,14 @@ class SharedCacheSpec extends SparkSpec {
     assert(second.select(sum("y")).head().getLong(0) == 9900)
   }
 
+  test("an entry rebuilt after clear is read from its new files") {
+    val df = spark.range(50).select((col("id") * 3).as("x"))
+    def entry = SharedCache.materialise(df, SharedCache.defaultRoot, "cleared")
+    assert(entry.count() == 50)
+    SharedCache.clear(spark)
+    assert(entry.agg(sum("x")).head().getLong(0) == 3675)
+  }
+
   test("a changed plan gets a new key and recomputes") {
     val a = spark.range(10).toDF("id")
     val b = spark.range(10).select((col("id") + 1).as("id"))

@@ -8,6 +8,7 @@ sorted-by-name column list, and a hash of the row-sorted values.
 Usage: python3 tools/check.py <sfDir> <verifyOutDir>
 """
 import json
+import os
 import sys
 
 import duckdb
@@ -39,7 +40,11 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
 def main(sf_dir: str, out_dir: str) -> int:
     con = duckdb.connect()
     for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+        path = f"{sf_dir}/{t}.parquet"
+        # a Spark-written table is a directory of part files
+        if os.path.isdir(path):
+            path += "/*.parquet"
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
     for name, sql in sorted(oracle.items()):
